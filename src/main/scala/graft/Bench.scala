@@ -32,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   * run would re-pay Janino compilation (measured: `executions` 3.1 s
   * evicted vs 0.65 s warm). `spark.sql.codegen.cache.maxEntries=4096`
   * keeps every stage's classes warm across the whole 121-query session
-  * (verified by graft.tools.CodegenCacheProbe: after a full contract
+  * (verified with a one-off probe: after a full contract
   * pass, early-alphabet re-runs stay at warm-adjacent times).
   *
   * Output: the driver-contract JSON line on stdout (3-decimal medians),
@@ -45,6 +45,10 @@ import org.apache.spark.sql.SparkSession
   * Caches are cleared between runs so a query that persists intermediate
   * frames (pagerank, triangle_count) is timed cold each iteration and
   * cached blocks never accumulate across the 121-query session.
+  *
+  * A query that throws (in the warm-up or any round) is listed in the
+  * artifact's `failed` list, left out of every timing and of `value`, and
+  * makes the run exit non-zero.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -118,17 +122,33 @@ object Bench {
       graft.queries.GraphQueries.buildGraphArtifact(spark, sfDir, graphPath)
       graft.queries.VecQueries.buildVecIndexArtifact(spark, sfDir, vecPath)
     }
+    val failed = measure(spark, queryMap, names, sfDir, iters, outPath, amortize)
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Warm-up plus `iters` interleaved timed rounds over `names`; writes
+    * `outPath`, prints the stdout lines, and returns the queries that
+    * threw (timed and summed nowhere). */
+  def measure(spark: SparkSession,
+              queryMap: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+              names: Seq[String], sfDir: String, iters: Int, outPath: String,
+              amortize: Boolean): Seq[String] = {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     // Write to the noop sink, NOT count(): count(1) lets Catalyst prune every
     // unreferenced column, so projection-only queries (text_stats, lang_id,
     // fingerprint, ...) would time just the parquet scan instead of the real
     // per-row compute (regexp, md5, window functions).
-    def run(name: String): Unit =
+    def run(name: String): Boolean =
       try {
         queryMap(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
+        true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        false
       }
     // Global warmup (JIT + page cache + generated-class cache — kept
     // warm for the whole session by codegen.cache.maxEntries above),
@@ -137,12 +157,12 @@ object Bench {
     names.foreach(run)
     val timed = scala.collection.mutable.Map
       .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    for (_ <- 1 to iters; name <- names) {
+    for (_ <- 1 to iters; name <- names if !failed.contains(name)) {
       val t0 = System.nanoTime()
-      run(name)
-      timed(name) = timed(name) :+ (System.nanoTime() - t0) / 1e9
+      if (run(name)) timed(name) = timed(name) :+ (System.nanoTime() - t0) / 1e9
     }
-    val samples: Seq[(String, Seq[Double])] = names.map(n => n -> timed(n))
+    val ok = names.filterNot(failed.contains)
+    val samples: Seq[(String, Seq[Double])] = ok.map(n => n -> timed(n))
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -207,7 +227,7 @@ object Bench {
     // Anchors were measured at sf0.1 — exact directory-name match (a
     // substring test would also match ".../sf0.15" or a copied dir).
     val anchorsApply = new java.io.File(sfDir).getName == "sf0.1" &&
-      controlAnchors.keys.forall(timed(_).nonEmpty)
+      controlAnchors.keys.forall(ok.contains)
     // Round-10 finding: a host-noise episode can poison TWO of three
     // interleaved rounds, and a per-query median then reports the noise
     // (graph_walks_biased published at 35.7 s vs a true 4.2 s). Defense:
@@ -268,8 +288,9 @@ object Bench {
     // amortize artifacts are a DIFFERENT measurement (artifact readers,
     // family subset) — tag them so they can never read as a standard run
     val amortizeTag = if (amortize) ""","amortize":true""" else ""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters$amortizeTag$calib}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","iters":$iters,"failed":$failedJson$amortizeTag$calib}"""
     val raw = samples.map { case (k, v) =>
       "\"" + k + "\":" + v.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -299,7 +320,6 @@ object Bench {
     val full = line.dropRight(1) +
       s""","queries_min":${obj(minima)},"total_min":${f3(minima.map(_._2).sum)},"queries_spread":${obj(spreads)},"spread_flagged":$flaggedJson,"samples":$raw}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
-    spark.stop()
     // Stdout contract (r17, verdict #2): the driver parses the FINAL
     // stdout line, so the final line must carry the per-query medians —
     // rounds 15/16 shipped a total-only final line (a defense against
@@ -311,5 +331,6 @@ object Bench {
     val hfShort = hostFactor.map(hf => s""","host_speed_factor":${f3(hf)}""").getOrElse("")
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":{},"sf":"$sfDir","iters":$iters,"nqueries":${names.size},"bench_json":"$outPath"$hfShort}""")
     println(line)
+    failed.toSeq
   }
 }

@@ -5,7 +5,8 @@ package graft.ops
   *
   * The adaptive operators (Ranks.ntileByRange / runningSumByRange,
   * ConnectedComponents.clusters, GraphQueries.pagerank,
-  * Similarity.cosineNearDupPairsAuto's maxBucket cap) each pick between
+  * Similarity.cosineNearDupPairsAuto's maxBucket cap, StreamingJob's
+  * micro-batch driver path) each pick between
   * a small-input fast path and a distributed path that is bit-identical
   * by construction. At contract scale (sf ≤ 0.1) every input sits under
   * the thresholds, so the distributed branches would only ever run in

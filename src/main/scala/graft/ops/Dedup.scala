@@ -29,7 +29,7 @@ object Dedup {
     * r15 docs_zipf tier): a band key that ≥ this many documents collide
     * on is non-discriminative — at 20%-boilerplate corpus scale the
     * template's GLOBALLY CONSTANT min-hashes concentrate ~15k docs on
-    * one (idx, key) (measured: tools.LshBucketProbe), whose |bucket|²
+    * one (idx, key) (measured with a one-off bucket-size probe), whose |bucket|²
     * ≈ 2.4·10⁸ pair expansion ran single-task for 2+ CPU-hours while
     * every discriminative bucket stayed ≤ 345. P[true near-dup | collide]
     * collapses at such populations (two random docs sharing ONLY the

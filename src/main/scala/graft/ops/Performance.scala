@@ -66,7 +66,7 @@ object Performance {
     * update calls); metrics_5m's remaining cost is the rolling-operator
     * window pipeline it shares with the strategy, not the aggregation.
     *
-    * Measured (sf0.1, warm, medians via tools.MetricsBreakdownProbe):
+    * Measured (sf0.1, warm medians of a one-off stage-by-stage probe):
     * upstream returns pipeline alone 0.93 s; + this aggregate 1.02 s;
     * + metrics finishing 1.08 s; Rollup.hourly on top 1.01 s. The
     * aggregate contributes ~90 ms of a ~1 s query — the ceiling on any

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.config.StrategyConfig
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,20 @@ object Positions {
     * spread, per-tick signal position, forward-filled position.
     * Input: SmaCross.enrich output (normalized + fast/slow/spread/prev_spread).
     */
-  def stream(enriched: DataFrame): DataFrame = {
-    val w = Ticks.byInstrument
+  def stream(enriched: DataFrame): DataFrame =
+    // W6 forward-fill (sma_cross.py:223-230). signal_position is never
+    // null here (HOLD rows carry 0.0), so this equals the current row's
+    // value — kept as last(ignoreNulls) for semantic fidelity with the
+    // reference construct.
+    streamRows(enriched, coalesce(
+      last(col("signal_position"), ignoreNulls = true)
+        .over(Ticks.byInstrument.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+      lit(0.0)))
+
+  /** The per-row part of [[stream]] around its one window column,
+    * `position`: the forward-fill above, or the column a keyed step
+    * already folded (StreamingJob's driver path passes `col("position")`). */
+  def streamRows(enriched: DataFrame, position: Column): DataFrame = {
     val isLong = col("spread") > 0d && col("prev_spread") <= 0d
     val isShort = col("spread") < 0d && col("prev_spread") >= 0d
     enriched
@@ -42,15 +54,7 @@ object Positions {
       .withColumn("spread",
         when(col("best_bid").isNotNull && col("best_ask").isNotNull,
           col("best_ask") - col("best_bid")).otherwise(lit(null).cast("double")))
-      // W6 forward-fill (sma_cross.py:223-230). signal_position is never
-      // null here (HOLD rows carry 0.0), so this equals the current row's
-      // value — kept as last(ignoreNulls) for semantic fidelity with the
-      // reference construct.
-      .withColumn("position",
-        coalesce(
-          last(col("signal_position"), ignoreNulls = true)
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-          lit(0.0)))
+      .withColumn("position", position)
       .drop("signal_position", "price", "fast_sma", "slow_sma", "prev_spread")
   }
 
@@ -58,8 +62,12 @@ object Positions {
     * position, position change, NULL/0-guarded ratios (P5), clamped dynamic
     * slippage (P6) and fill latency (P7).
     */
-  def costs(positions: DataFrame, cfg: StrategyConfig): DataFrame = {
-    val w = Ticks.byInstrument
+  def costs(positions: DataFrame, cfg: StrategyConfig): DataFrame =
+    costRows(positions, cfg, lag(col("position"), 1).over(Ticks.byInstrument))
+
+  /** The per-row part of [[costs]] around its one window column,
+    * `prev_position`: the lag above, or a folded column. */
+  def costRows(positions: DataFrame, cfg: StrategyConfig, prevPosition: Column): DataFrame = {
     val volRatio =
       when(col("mid_price").isNull || col("mid_price") === 0d, lit(0.0))
         .otherwise(coalesce(col("volatility"), lit(0.0)) / col("mid_price"))
@@ -79,7 +87,7 @@ object Positions {
       least(lit(cfg.fillLatencyMs + cfg.fillLatencyJitterMs), lit(cfg.fillLatencyMs) + latencyInc))
 
     positions
-      .withColumn("prev_position", lag(col("position"), 1).over(w))
+      .withColumn("prev_position", prevPosition)
       .withColumn("position_change", col("position") - coalesce(col("prev_position"), lit(0.0)))
       .withColumn("volatility_ratio", volRatio)
       .withColumn("spread_ratio", spreadRatio)

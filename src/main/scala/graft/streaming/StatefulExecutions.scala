@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.config.StrategyConfig
-import graft.ops.Normalize
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -12,11 +11,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `flatMapGroupsWithState` operator — nothing recomputed, one state
   * update per tick.
   *
-  * Every formula replays `Positions.costs`/`Positions.executions`
-  * (sma_cross.py:235-354) with the exact Det arithmetic (scaled-Long ring
-  * buffers, exact Long variance numerator, decimal-path casts), so
-  * emitted executions are bit-identical to the batch pipeline
-  * (StatefulExecutionsSpec).
+  * The rolling columns come from the shared [[SmaStep]] (scaled-Long ring
+  * buffers with running sums, exact Long variance numerator); the cost
+  * formulas replay `Positions.costs`/`Positions.executions`
+  * (sma_cross.py:235-354), so emitted executions are bit-identical to
+  * the batch pipeline (StatefulExecutionsSpec).
   */
 object StatefulExecutions {
 
@@ -32,102 +31,44 @@ object StatefulExecutions {
       position_change: Double, execution_price: Double, base_price: Double,
       transaction_cost: Double, slippage_cost: Double)
 
-  final case class KeyState(
-      lastEventUs: Long, lastSeq: Long,
-      mids9: Vector[Long],   // mid·1e9 (SMA sums)
-      k4: Vector[Long],      // mid·1e4 (variance grid)
-      spreads: Vector[Double],
-      prevPosition: Double)
-
-  private def sma(mids9: Vector[Long], w: Int): Double = {
-    // Det rule 3 finishing: (double)Σk / 10^s / n — the same correctly-
-    // rounded IEEE sequence as Det.avgDTrailing's long-grid path.
-    val window = mids9.takeRight(w)
-    (window.sum.toDouble / 1e9) / window.size
-  }
-
-  /** Exact-integer population stddev over the trailing lookback —
-    * replays Det.stddevPopDTrailing bit-for-bit. */
-  private def vol(k4: Vector[Long], w: Int): Double = {
-    val window = k4.takeRight(w)
-    val n = window.size
-    val s1 = window.sum
-    val s2 = window.map(k => k * k).sum
-    val d = n * s2 - s1 * s1 // exact; >= 0 by Cauchy-Schwarz
-    math.sqrt(d.toDouble) / (1e4 * n)
-  }
-
   def executions(ticks: Dataset[TickIn], cfg: StrategyConfig): Dataset[ExecutionOut] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    val cap = math.max(cfg.smaSlowWindow, Normalize.VolatilityLookback) + 1
-    val lookback = Normalize.VolatilityLookback
-
     ticks
       .groupByKey(_.product_id)
-      .flatMapGroupsWithState[KeyState, ExecutionOut](
+      .flatMapGroupsWithState[SmaStep.KeyState, ExecutionOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[TickIn], state: GroupState[KeyState]) =>
-          var st = state.getOption.getOrElse(
-            KeyState(Long.MinValue, Long.MinValue, Vector.empty, Vector.empty,
-              Vector.empty, 0.0))
-          val out = Vector.newBuilder[ExecutionOut]
-          // exact micros — getTime truncates sub-ms and would mis-sort vs batch
-          val sorted = rows.toVector.sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastEventUs || (us == st.lastEventUs && t.sequence > st.lastSeq)) {
-              // P1 mid-price (sma_cross.py:67-70)
-              val mid =
-                if (t.best_bid != null && t.best_ask != null)
-                  (t.best_bid.doubleValue + t.best_ask.doubleValue) / 2d
-                else t.price
-              val mids9 = (st.mids9 :+ math.floor(mid * 1e9 + 0.5).toLong).takeRight(cap)
-              val k4s = (st.k4 :+ math.floor(mid * 1e4 + 0.5).toLong).takeRight(cap)
-              val fast = sma(mids9, cfg.smaFastWindow)
-              val slow = sma(mids9, cfg.smaSlowWindow)
-              val smaSpread = fast - slow
-              val spreads = (st.spreads :+ smaSpread).takeRight(cfg.confirmation + 1)
-              val prevOpt = if (spreads.size > cfg.confirmation) Some(spreads.head) else None
-              val position = prevOpt match {
-                case Some(p) if smaSpread > 0 && p <= 0 => 1.0
-                case Some(p) if smaSpread < 0 && p >= 0 => -1.0
-                case _ => 0.0
-              }
-              val change = position - st.prevPosition
-              if (change != 0.0) {
-                // P5-P9: ratio guards, clamped slippage/latency, exec price
-                val volatility = vol(k4s, lookback)
-                val volRatio = if (mid == 0d) 0.0 else volatility / mid
-                val bidAskSpread =
-                  if (t.best_bid != null && t.best_ask != null)
-                    t.best_ask.doubleValue - t.best_bid.doubleValue
-                  else Double.NaN
-                val spreadRatio =
-                  if (mid == 0d || bidAskSpread.isNaN) 0.0 else bidAskSpread / mid
-                val slip = math.max(0.0, math.min(cfg.slippageMaxRate,
-                  cfg.slippageRate + volRatio * cfg.slippageVolatilityMultiplier +
-                    spreadRatio * cfg.slippageSpreadMultiplier))
-                val latency = math.max(cfg.fillLatencyMs,
-                  math.min(cfg.fillLatencyMs + cfg.fillLatencyJitterMs,
-                    cfg.fillLatencyMs + (cfg.fillLatencyVolatilityMs.toDouble * volRatio).toLong))
-                val execPrice =
-                  if (change > 0) mid * (1.0 + slip)
-                  else mid * (1.0 - slip)
-                // batch uses timestampadd(MILLISECOND, ...), which keeps the
-                // event's sub-ms micros — add in micro space, not getTime ms
-                out += ExecutionOut(
-                  cfg.strategyRunId, key, t.event_time, t.sequence,
-                  EventTime.toTimestamp(us + latency * 1000L),
-                  change, execPrice, mid,
-                  math.abs(change) * mid * cfg.transactionCostRate,
-                  math.abs(change) * mid * slip)
-              }
-              st = KeyState(us, t.sequence, mids9, k4s, spreads, position)
+        (key: String, rows: Iterator[TickIn], state: GroupState[SmaStep.KeyState]) =>
+          val quoted = (t: TickIn) => t.best_bid != null && t.best_ask != null
+          // P1 mid-price (sma_cross.py:67-70)
+          val mid = (t: TickIn) =>
+            if (quoted(t)) (t.best_bid.doubleValue + t.best_ask.doubleValue) / 2d else t.price
+          SmaStep.foldGroup(cfg, rows, state)(_.event_time, _.sequence, mid) { (t, us, o) =>
+            val change = o.position - (if (o.prevPosition == null) 0.0 else o.prevPosition.doubleValue)
+            if (change == 0.0) None
+            else {
+              // P5-P9: ratio guards, clamped slippage/latency, exec price
+              val volRatio = if (o.mid == 0d) 0.0 else o.volatility / o.mid
+              val spreadRatio =
+                if (o.mid == 0d || !quoted(t)) 0.0
+                else (t.best_ask.doubleValue - t.best_bid.doubleValue) / o.mid
+              val slip = math.max(0.0, math.min(cfg.slippageMaxRate,
+                cfg.slippageRate + volRatio * cfg.slippageVolatilityMultiplier +
+                  spreadRatio * cfg.slippageSpreadMultiplier))
+              val latency = math.max(cfg.fillLatencyMs,
+                math.min(cfg.fillLatencyMs + cfg.fillLatencyJitterMs,
+                  cfg.fillLatencyMs + (cfg.fillLatencyVolatilityMs.toDouble * volRatio).toLong))
+              val execPrice = if (change > 0) o.mid * (1.0 + slip) else o.mid * (1.0 - slip)
+              // batch uses timestampadd(MILLISECOND, ...), which keeps the
+              // event's sub-ms micros — add in micro space, not getTime ms
+              Some(ExecutionOut(
+                cfg.strategyRunId, key, t.event_time, t.sequence,
+                EventTime.toTimestamp(us + latency * 1000L),
+                change, execPrice, o.mid,
+                math.abs(change) * o.mid * cfg.transactionCostRate,
+                math.abs(change) * o.mid * slip))
             }
           }
-          state.update(st)
-          out.result().iterator
       }
   }
 

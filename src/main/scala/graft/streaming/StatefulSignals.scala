@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.config.StrategyConfig
-import graft.ops.Normalize
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -12,8 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * equivalent; the two idiomatic replacements are (a) foreachBatch
   * recompute [StreamingJob] and (b) a per-key ring buffer of the last
   * slow-window mids [this]). Use (b) when per-event latency matters more
-  * than full-sink fan-out: state updates are O(1) per tick and nothing is
-  * recomputed.
+  * than full-sink fan-out: each tick is one [[SmaStep]] — ring buffers
+  * with running exact sums, O(1) per tick — and nothing is recomputed.
   *
   * Numeric contract: identical bits to the batch pipeline. Sums are kept
   * as exact scaled Longs (mid·10⁹ for SMAs, grid integers for the
@@ -37,61 +36,18 @@ object StatefulSignals {
       mid_price: Double, fast_sma: Double, slow_sma: Double,
       spread: Double, signal_type: String, position: Double)
 
-  /** Ring-buffer state: last `cap` mids as exact grid Longs. */
-  final case class KeyState(
-      lastEventUs: Long, lastSeq: Long,
-      mids9: Vector[Long],      // mid·1e9 (SMA sums)
-      k4: Vector[Long],         // mid·1e4 (variance grid, kept for parity/extension)
-      spreads: Vector[Double])  // recent spread values for the confirmation lag
-
-  private def sma(mids9: Vector[Long], w: Int): Double = {
-    // Det rule 3 finishing: (double)Σk / 10^s / n — the same correctly-
-    // rounded IEEE sequence as Det.avgDTrailing's long-grid path.
-    val window = mids9.takeRight(w)
-    (window.sum.toDouble / 1e9) / window.size
-  }
-
   def signals(ticks: Dataset[TickIn], cfg: StrategyConfig): Dataset[SignalOut] = {
     val spark = ticks.sparkSession
     import spark.implicits._
-    val cap = math.max(cfg.smaSlowWindow, Normalize.VolatilityLookback) + 1
-
     ticks
       .groupByKey(_.product_id)
-      .flatMapGroupsWithState[KeyState, SignalOut](
+      .flatMapGroupsWithState[SmaStep.KeyState, SignalOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[TickIn], state: GroupState[KeyState]) =>
-          var st = state.getOption.getOrElse(
-            KeyState(Long.MinValue, Long.MinValue, Vector.empty, Vector.empty, Vector.empty))
-          val out = Vector.newBuilder[SignalOut]
-          // micro-batches are unordered: restore event-time order per key
-          // (exact micros — getTime truncates sub-ms and would mis-sort)
-          val sorted = rows.toVector.sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastEventUs || (us == st.lastEventUs && t.sequence > st.lastSeq)) {
-              val mid9 = math.floor(t.mid_price * 1e9 + 0.5).toLong
-              val k4 = math.floor(t.mid_price * 1e4 + 0.5).toLong
-              val mids9 = (st.mids9 :+ mid9).takeRight(cap)
-              val k4s = (st.k4 :+ k4).takeRight(cap)
-              val fast = sma(mids9, cfg.smaFastWindow)
-              val slow = sma(mids9, cfg.smaSlowWindow)
-              val spread = fast - slow
-              val spreads = (st.spreads :+ spread).takeRight(cfg.confirmation + 1)
-              // LAG(spread, confirmation): null until enough history
-              val prevOpt = if (spreads.size > cfg.confirmation) Some(spreads.head) else None
-              val (sig, pos) = prevOpt match {
-                case Some(prev) if spread > 0 && prev <= 0 => ("LONG", 1.0)
-                case Some(prev) if spread < 0 && prev >= 0 => ("SHORT", -1.0)
-                case _ => ("HOLD", 0.0)
-              }
-              out += SignalOut(key, t.event_time, t.sequence, t.mid_price,
-                fast, slow, spread, sig, pos)
-              st = KeyState(us, t.sequence, mids9, k4s, spreads)
-            } // else: late beyond state → dropped (watermark semantics)
+        (key: String, rows: Iterator[TickIn], state: GroupState[SmaStep.KeyState]) =>
+          SmaStep.foldGroup(cfg, rows, state)(_.event_time, _.sequence, _.mid_price) {
+            (t, _, o) => Some(SignalOut(key, t.event_time, t.sequence, t.mid_price,
+              o.fastSma, o.slowSma, o.spread, o.signalType, o.position))
           }
-          state.update(st)
-          out.result().iterator
       }
   }
 

@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.config.StrategyConfig
 import graft.strategy.SmaCrossStrategy
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
@@ -12,9 +13,24 @@ import scala.collection.mutable
   * micro-batches yields EXACTLY the rows of one batch run (SURVEY §7
   * "hard parts" 1-3: rolling state across batch boundaries via the
   * carried tail).
+  *
+  * Every case runs on both sides of the job's size gate: as written
+  * (the fixtures' batches fold on the driver) and again with
+  * `graft.force.distributed` set, which sends every batch down the Spark
+  * tail-recompute path.
   */
 class StreamingJobSpec extends AnyFunSuite {
   import TestSpark._
+
+  private def forced[A](body: => A): A = {
+    sys.props("graft.force.distributed") = "1"
+    try body finally sys.props -= "graft.force.distributed"
+  }
+
+  private def bothPaths(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name [Spark path forced]")(forced(body))
+  }
 
   private val cfg = StrategyConfig(
     smaFastWindow = 3, smaSlowWindow = 6, smaConfirmationWindow = 1)
@@ -28,7 +44,7 @@ class StreamingJobSpec extends AnyFunSuite {
   } yield Tick(p, ts(i * 10L), i.toLong, price(i) + (if (p == "A") 0 else 5),
     price(i) * 0.999, price(i) * 1.001)).toVector
 
-  test("micro-batched streaming equals one-shot batch for every sink") {
+  bothPaths("micro-batched streaming equals one-shot batch for every sink") {
     val s = spark
     import s.implicits._
 
@@ -74,7 +90,7 @@ class StreamingJobSpec extends AnyFunSuite {
       "upserted metrics must converge to batch metrics")
   }
 
-  test("restart from checkpoint: a fresh job resumes from persisted tail state") {
+  bothPaths("restart from checkpoint: a fresh job resumes from persisted tail state") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val sorted = rows.sortBy(t => (t.event_time.getTime, t.product_id))
     val (chunk1, chunk2) = sorted.splitAt(200)
@@ -108,7 +124,7 @@ class StreamingJobSpec extends AnyFunSuite {
   private def canonRows(rs: Iterable[Row]): Seq[String] =
     rs.map(r => r.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
-  test("restart through start()+checkpointLocation: tail loads at batchId > 0") {
+  bothPaths("restart through start()+checkpointLocation: tail loads at batchId > 0") {
     val s = spark
     val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
     val ckpt = base + "/ckpt"
@@ -137,7 +153,7 @@ class StreamingJobSpec extends AnyFunSuite {
       "signals across a real checkpointed restart must equal the batch run")
   }
 
-  test("a replayed micro-batch (tail persisted, commit lost) upserts the batch values") {
+  bothPaths("a replayed micro-batch (tail persisted, commit lost) upserts the batch values") {
     val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
     val sorted = rows.sortBy(t => (t.event_time.getTime, t.product_id))
     val (c1, rest) = sorted.splitAt(150)
@@ -162,7 +178,7 @@ class StreamingJobSpec extends AnyFunSuite {
       "upserted signals after a replayed batch must equal the batch run")
   }
 
-  test("a late row within the carried tail is reordered into its correct place") {
+  bothPaths("a late row within the carried tail is reordered into its correct place") {
     val sig = mutable.ArrayBuffer[Row]()
     val job = new StreamingJob(SmaCrossStrategy, cfg,
       Sinks(signals = df => sig ++= df.collect()))
@@ -184,6 +200,75 @@ class StreamingJobSpec extends AnyFunSuite {
     val expectedLateOn = canon(batchSignals.filter(_.getAs[Long]("sequence") >= 35L).toSeq)
     expectedLateOn.foreach(e => assert(emitted.contains(e),
       s"late-row-corrected signal missing: $e"))
+  }
+
+  bothPaths("an unreadable committed tail fails the next batch instead of starting empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
+    val (c1, c2) = rows.sortBy(t => (t.event_time.getTime, t.product_id)).splitAt(200)
+    new StreamingJob(SmaCrossStrategy, cfg, Sinks(), checkpointDir = Some(dir))
+      .processBatch(ticksOf(c1), 0L)
+    val files = new java.io.File(dir, "graft-tail").listFiles().toSeq
+    val parts = files.filter(_.getName.endsWith(".parquet"))
+    assert(parts.nonEmpty, "the first batch must commit a tail")
+    files.filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    parts.foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+
+    val restarted = new StreamingJob(SmaCrossStrategy, cfg, Sinks(), checkpointDir = Some(dir))
+    intercept[Exception](restarted.processBatch(ticksOf(c2), 1L))
+  }
+
+  bothPaths("a tick with no price and no quotes, or no sequence, fails the batch before any sink") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-unfoldable").toString
+    val seen = mutable.ArrayBuffer[Row]()
+    val collect = (df: DataFrame) => { seen ++= df.collect(); () }
+    val job = new StreamingJob(SmaCrossStrategy, cfg,
+      Sinks(collect, collect, collect, collect, collect), checkpointDir = Some(dir))
+    def withLast(tick: Tick) = (rows.take(20) :+ tick).toDF()
+    val unpriced = withLast(Tick("A", ts(500), 999L, null, null, 101.0))
+    val unsequenced = withLast(Tick("A", ts(500), 999L, 100.0, 99.0, 101.0)).withColumn(
+      "sequence", when(col("sequence") === 999L, lit(null)).otherwise(col("sequence")))
+    Seq(unpriced, unsequenced).foreach { batch =>
+      // not a LocalRelation, so the Spark path's one-row fetch does not
+      // reach the bad tick and the check must fire inside the batch
+      val e = intercept[Exception](job.processBatch(batch.repartition(1), 0L))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("no price and no quotes")))
+    }
+    assert(seen.isEmpty, "no sink may see a failed batch")
+    assert(!new java.io.File(dir, "graft-tail").exists, "a failed batch must not commit a tail")
+  }
+
+  test("batches crossing the size gate mid-stream (small, large, small) equal batch") {
+    // three instruments, enough ticks that the middle batch exceeds the gate
+    val perKey = (StreamingJob.DriverBatchRows.toInt + 900) / 3
+    val many = (for { p <- Seq("A", "B", "C"); i <- 0 until perKey } yield
+      (p, i * 10L, i.toLong, price(i) + (if (p == "A") 0 else 5),
+        Option(price(i) * 0.999), Option(price(i) * 1.001)))
+      .sortBy(r => (r._2, r._1))
+    val (small1, rest) = many.splitAt(300)
+    val (large, small2) = rest.splitAt(StreamingJob.DriverBatchRows.toInt + 100)
+    assert(small2.nonEmpty && small2.size < StreamingJob.DriverBatchRows)
+
+    val bufs = Seq.fill(4)(mutable.ArrayBuffer[Row]())
+    val metBuf = mutable.LinkedHashMap[Any, Row]()
+    val job = new StreamingJob(SmaCrossStrategy, cfg, Sinks(
+      signals = df => bufs(0) ++= df.collect(),
+      positions = df => bufs(1) ++= df.collect(),
+      executions = df => bufs(2) ++= df.collect(),
+      normalized = df => bufs(3) ++= df.collect(),
+      metrics = df => df.collect().foreach(r => metBuf(r.getAs[Any]("metric_time")) = r)))
+    Seq(small1, large, small2).zipWithIndex.foreach { case (b, i) =>
+      job.processBatch(ticks(b), i.toLong) }
+
+    val batchOut = SmaCrossStrategy(ticks(many), cfg)
+    Seq(batchOut.signals, batchOut.positions, batchOut.executions, batchOut.normalized)
+      .zip(bufs).zip(Seq("signals", "positions", "executions", "normalized"))
+      .foreach { case ((want, got), name) =>
+        assert(canonRows(got) == canonRows(want.collect()), s"$name must match batch run") }
+    assert(canonRows(metBuf.values) == canonRows(batchOut.metrics.collect()),
+      "upserted metrics must converge to batch metrics")
   }
 
   test("tail size covers every rolling operator's lookback") {
