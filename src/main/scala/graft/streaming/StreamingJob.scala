@@ -50,19 +50,19 @@ final case class Sinks(
   *    emitted folded rows, the per-row columns (costs, clamps, `to_json`
   *    metadata) stay the strategy's own Spark expressions
   *    ([[SmaCrossStrategy.outputs]]), and metrics are one Spark `groupBy`
-  *    over the open windows' folded rows. Two Spark jobs per batch (the
-  *    metrics aggregate and the tail write), plus the fetch when the
-  *    batch is not already local.
+  *    over the open windows' folded rows. One Spark job per batch (the
+  *    metrics aggregate), plus the fetch when the batch is not already
+  *    local.
   *  - Spark path (larger batches, other strategies, or
   *    `graft.force.distributed` / `SPARK_GRAFT_FORCE_DISTRIBUTED` through
-  *    [[Adaptive.threshold]]): the tail is a DataFrame; tail ∪ batch is
-  *    persisted, the strategy runs over it and each sink reads its slice.
-  * The state changes hands at the gate: a held tail becomes a
-  * `LocalRelation` when a large batch arrives; a Spark tail is collected
-  * (bounded by tailRows × live keys) when a small batch follows. Both
-  * paths emit the same rows, so sinks cannot tell them apart; a tick
-  * neither can fold (no sequence, or no price and no quotes) fails the
-  * batch on either path before any sink runs.
+  *    [[Adaptive.threshold]]): the held tail becomes a `LocalRelation`,
+  *    tail ∪ batch is persisted, the strategy runs over it and each sink
+  *    reads its slice; the next tail (bounded by tailRows × live keys plus
+  *    the open window) is collected back to the driver.
+  * Both paths keep the one driver-held tail, so the state needs no
+  * hand-over at the gate. Both emit the same rows, so sinks cannot tell
+  * them apart; a tick neither can fold (no sequence, or no price and no
+  * quotes) fails the batch on either path before any sink runs.
   *
   * Event time: watermark bounds disorder at the source (T1,
   * __main__.py:63); rows later than the watermark may still reach
@@ -70,15 +70,19 @@ final case class Sinks(
   * the reference's drop-after-watermark envelope (T3).
   *
   * Exactly-once through the fan-out: with a checkpoint dir the tail is
-  * persisted as parquet only AFTER every sink callback returns (and only
-  * then replaces the in-memory state), so a crash inside any sink replays
+  * committed as the next [[TailStore]] version under
+  * `<checkpoint>/graft-tail` (a driver-side file write and rename, no
+  * Spark job) only AFTER every sink callback returns (and only then
+  * replaces the in-memory state), so a crash inside any sink replays
   * the whole micro-batch against the pre-batch tail — the recomputed
   * frames are bit-identical (streaming ≡ batch) and PK-idempotent JDBC
   * sinks ([[graft.io.JdbcSink.upsert]], wired by Main's
   * JDBC_WRITE_MODE=upsert) absorb the re-delivery.
   * MultiSinkExactlyOnceSpec proves the composition end to end. On
-  * restart, an absent tail means no state yet; a committed tail that
-  * cannot be read throws rather than restart the rolling state from zero.
+  * restart the newest committed version is loaded; a crash mid-commit
+  * leaves the previous one. No committed version means no state yet; one
+  * that cannot be read throws rather than restart the rolling state from
+  * zero.
   */
 final class StreamingJob(
     strategy: Strategy,
@@ -103,18 +107,23 @@ final class StreamingJob(
 
   private def windowStartMs(tsMs: Long): Long = tsMs - Math.floorMod(tsMs, metricsWindowMs)
 
-  @volatile private var tail: Option[Tail] = None
+  @volatile private var tail: Option[HeldTail] = None
   @volatile private var tailLoaded = false
+  @volatile private var store: Option[TailStore] = None
 
-  private def tailPath = checkpointDir.map(_ + "/graft-tail")
+  /** The committed tail on restart: the newest version under
+    * `<checkpoint>/graft-tail` ([[TailStore]]). */
+  private def loadTail(spark: SparkSession): Unit = {
+    store = checkpointDir.map(d => new TailStore(s"$d/graft-tail", spark))
+    tail = store.flatMap(s => HeldTail.of(s.load().map(Tick.of), cfg))
+  }
 
-  /** The persisted tail on restart. Only an absent path means "no state
-    * yet"; a committed tail that cannot be read throws. */
-  private def loadTail(spark: SparkSession): Option[DataFrame] =
-    tailPath.filter { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-    }.map(spark.read.parquet(_))
+  /** Runs only after every sink has returned: a crash before it replays
+    * the batch against the previous tail. */
+  private def commit(next: Option[HeldTail]): Unit = {
+    store.foreach(_.commit(next.toSeq.flatMap(_.rows)))
+    tail = next
+  }
 
   /** One micro-batch: fetch up to gate + 1 rows, then fold on the driver
     * or recompute in Spark. */
@@ -129,7 +138,7 @@ final class StreamingJob(
     // whatever its id: after a checkpoint restart foreachBatch resumes with
     // the last UNcommitted batchId (> 0), and the pre-crash tail must still
     // seed the rolling operators (invariant 5, streaming ≡ batch).
-    if (!tailLoaded) { tail = loadTail(spark).map(FrameTail); tailLoaded = true }
+    if (!tailLoaded) { loadTail(spark); tailLoaded = true }
     if (fetched.length <= gate) driverBatch(spark, fetched.toSeq.map(Tick.of))
     else sparkBatch(checked)
   }
@@ -145,10 +154,7 @@ final class StreamingJob(
   /** Driver path: fold each instrument of the batch once, hand the sinks
     * `LocalRelation` frames, keep the trimmed tail on the driver. */
   private def driverBatch(spark: SparkSession, ticks: Seq[Tick]): Unit = {
-    val prior: Option[HeldTail] = tail.flatMap {
-      case h: HeldTail => Some(h)
-      case FrameTail(df) => HeldTail.of(df.select(TailCols: _*).collect().toSeq.map(Tick.of), cfg)
-    }
+    val prior = tail
     val held = prior.fold(Map.empty[String, Vector[Held]])(_.keys)
     val byKey = ticks.groupBy(_.product)
     val refolded = byKey.map { case (k, ts) =>
@@ -174,11 +180,9 @@ final class StreamingJob(
     emit(driverPlans(spark).bind(emitted.map(_.folded), windowRows.map(_.folded)))
 
     val maxUs = (ticks.iterator.map(_.us) ++ prior.map(_.maxUs)).max
-    val next = HeldTail(keys.flatMap { case (k, hs) =>
+    commit(Some(HeldTail(keys.flatMap { case (k, hs) =>
       Some(trim(hs, maxUs)).filter(_.nonEmpty).map(k -> _)
-    }, maxUs)
-    tailPath.foreach(p => next.frame(spark).write.mode("overwrite").parquet(p))
-    tail = Some(next)
+    }, maxUs)))
   }
 
   @volatile private var plans: Option[DriverPlans] = None
@@ -210,29 +214,15 @@ final class StreamingJob(
     * persisted input, fan out. */
   private def sparkBatch(batch: DataFrame): Unit = {
     val spark = batch.sparkSession
-    val tailFrame = tail.map {
-      case FrameTail(df) => df
-      case h: HeldTail => h.frame(spark)
-    }
-    // ONE driver-blocking scalar job per micro-batch: the tail's high-water
-    // mark and the batch's combined max event time come from a single
-    // aggregation over the (cheap) event_time projection of tail ∪ batch.
+    val tailFrame = tail.map(_.frame(spark))
     // The tail carries every row of the still-open metrics window, so its
-    // max event time is the previous batch's high-water mark; windows at or
-    // after its window-start were NOT final then and are re-emitted refined.
-    // Dedup can't change either max (duplicate keys carry identical rows).
-    val times = tailFrame match {
-      case Some(t) => t.select(col("event_time"), lit(true).as("__isTail"))
-        .unionByName(batch.select(col("event_time"), lit(false).as("__isTail")))
-      case None => batch.select(col("event_time"), lit(false).as("__isTail"))
-    }
-    val mrow = times.agg(
-      max(when(col("__isTail"), col("event_time"))).as("tailMax"),
-      max(col("event_time")).as("allMax")).head()
-    val prevOpenStartMs: Option[Long] =
-      if (mrow.isNullAt(0)) None
-      else Some(windowStartMs(mrow.getTimestamp(0).getTime))
-    val maxEventMs = mrow.getTimestamp(1).getTime
+    // high-water mark is the previous batch's; windows at or after its
+    // window-start were NOT final then and are re-emitted refined. One
+    // scalar job gives the batch's max event time.
+    val tailMaxMs = tail.map(t => Math.floorDiv(t.maxUs, 1000L))
+    val prevOpenStartMs = tailMaxMs.map(windowStartMs)
+    val maxEventMs = (tailMaxMs.toSeq :+
+      batch.agg(max(col("event_time"))).head().getTimestamp(0).getTime).max
     val withTail = tailFrame match {
       // A replayed batch (crash after the tail was persisted but before the
       // micro-batch committed) is already inside the tail: keep one copy of
@@ -283,11 +273,10 @@ final class StreamingJob(
       .filter((col("event_time").cast("long") * 1000L >= lit(openStartMs) ||
         col("__rn") - col("__openRows") <= tailRows) &&
         col("event_time").cast("long") * 1000L >= lit(maxEventMs - idleStateTtlMs))
-      .drop("__rn", "__openRows")
-      .localCheckpoint(true) // cut lineage so state doesn't grow per batch
-    tailPath.foreach(p => nextTail.write.mode("overwrite").parquet(p))
-    tail = Some(FrameTail(nextTail))
+      .select(TailCols: _*)
+      .collect()
     input.unpersist()
+    commit(HeldTail.of(nextTail.toSeq.map(Tick.of), cfg))
   }
 
   /** Feed one pre-built micro-batch directly — the paced-replay consumer
@@ -321,12 +310,8 @@ object StreamingJob {
     * and slower at 40,000 (7.0 s vs 6.1 s). */
   val DriverBatchRows = 30000L
 
-  /** The raw columns the strategy reads: the driver fetch and the held tail. */
-  private val TailSchema = StructType(Seq(
-    StructField("product_id", StringType), StructField("event_time", TimestampType),
-    StructField("sequence", LongType), StructField("price", DoubleType),
-    StructField("best_bid", DoubleType), StructField("best_ask", DoubleType)))
-  private val TailCols = TailSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
+  private val TailSchema = TailStore.Schema
+  private val TailCols = TailStore.Columns
 
   /** `price`, failing the batch on a tick neither path can fold: one with
     * no sequence (it has no place in (event_time, sequence) order and no
@@ -344,14 +329,11 @@ object StreamingJob {
     Seq("mid_price", "best_bid", "best_ask", "returns", "volatility", "fast_sma", "slow_sma",
       "spread", "prev_spread", "position", "prev_position").map(StructField(_, DoubleType)))
 
-  private sealed trait Tail
-  private final case class FrameTail(df: DataFrame) extends Tail
-
   /** Driver-held tail: per product, its ticks in (event_time, sequence)
     * order with their folded rows; `maxUs` is the high-water mark. */
-  private final case class HeldTail(keys: Map[String, Vector[Held]], maxUs: Long) extends Tail {
-    def frame(spark: SparkSession): DataFrame =
-      spark.createDataFrame(keys.valuesIterator.flatten.map(_.tick.row).toSeq.asJava, TailSchema)
+  private final case class HeldTail(keys: Map[String, Vector[Held]], maxUs: Long) {
+    def rows: Seq[Row] = keys.valuesIterator.flatten.map(_.tick.row).toSeq
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, TailSchema)
   }
   private object HeldTail {
     def of(ticks: Seq[Tick], cfg: StrategyConfig): Option[HeldTail] =

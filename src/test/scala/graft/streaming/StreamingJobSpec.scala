@@ -202,19 +202,129 @@ class StreamingJobSpec extends AnyFunSuite {
       s"late-row-corrected signal missing: $e"))
   }
 
-  bothPaths("an unreadable committed tail fails the next batch instead of starting empty") {
+  private val sorted = rows.sortBy(t => (t.event_time.getTime, t.product_id))
+
+  /** Committed tail versions in `<dir>/graft-tail`, oldest first. */
+  private def tailVersions(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir, "graft-tail").listFiles()).toSeq.flatten
+      .filter(_.getName.matches("v\\d+")).sortBy(_.getName.drop(1).toLong)
+
+  /** Commit a tail for the first 200 ticks, let `damage` rewrite its one
+    * version's bytes, and expect the restarted job's next batch to throw. */
+  private def damagedTailFails(damage: Array[Byte] => Array[Byte]): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
-    val (c1, c2) = rows.sortBy(t => (t.event_time.getTime, t.product_id)).splitAt(200)
+    val (c1, c2) = sorted.splitAt(200)
     new StreamingJob(SmaCrossStrategy, cfg, Sinks(), checkpointDir = Some(dir))
       .processBatch(ticksOf(c1), 0L)
-    val files = new java.io.File(dir, "graft-tail").listFiles().toSeq
-    val parts = files.filter(_.getName.endsWith(".parquet"))
-    assert(parts.nonEmpty, "the first batch must commit a tail")
-    files.filter(_.getName.endsWith(".crc")).foreach(_.delete())
-    parts.foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+    val Seq(v0) = tailVersions(dir)
+    new java.io.File(dir, "graft-tail").listFiles().filter(_.getName.endsWith(".crc"))
+      .foreach(_.delete())
+    java.nio.file.Files.write(v0.toPath, damage(java.nio.file.Files.readAllBytes(v0.toPath)))
 
     val restarted = new StreamingJob(SmaCrossStrategy, cfg, Sinks(), checkpointDir = Some(dir))
-    intercept[Exception](restarted.processBatch(ticksOf(c2), 1L))
+    intercept[java.io.IOException](restarted.processBatch(ticksOf(c2), 1L))
+  }
+
+  bothPaths("an unreadable committed tail fails the next batch instead of starting empty") {
+    damagedTailFails(_ => "not a tail".getBytes)
+  }
+
+  bothPaths("a truncated committed tail version fails the next batch") {
+    // the trailer repeats the row count: one row fewer than the header's,
+    // then a file cut short inside its last row
+    damagedTailFails { b =>
+      val n = java.nio.ByteBuffer.wrap(b.takeRight(4)).getInt
+      b.dropRight(4) ++ java.nio.ByteBuffer.allocate(4).putInt(n - 1).array()
+    }
+    damagedTailFails(_.dropRight(10))
+  }
+
+  /** Batch `SmaCrossStrategy` over the first 220 ticks, each output's
+    * rows canonical: computed once for both gate sides. */
+  private lazy val first220 = {
+    val o = SmaCrossStrategy(ticksOf(sorted.take(220)), cfg)
+    Seq(o.normalized, o.signals, o.positions, o.executions, o.metrics).map(df =>
+      canonRows(df.collect()))
+  }
+
+  /** Every sink's emissions: the row sinks as sets (a replayed batch
+    * re-emits identical rows), metrics last-write-wins on metric_time. */
+  private final class Emitted {
+    private val bufs = Seq.fill(4)(mutable.LinkedHashSet[String]())
+    private val metrics = mutable.LinkedHashMap[Any, Row]()
+    private def add(i: Int)(df: DataFrame): Unit = bufs(i) ++= canonRows(df.collect())
+    val sinks = Sinks(add(0), add(1), add(2), add(3),
+      df => df.collect().foreach(r => metrics(r.getAs[Any]("metric_time")) = r))
+    /** Against batch `SmaCrossStrategy` over the first 220 ticks. */
+    def assertFirst220(): Unit = {
+      bufs.zip(first220).zip(Seq("normalized", "signals", "positions", "executions")).foreach {
+        case ((got, want), name) => assert(got.toSeq.sorted == want.distinct, s"$name must match batch run")
+      }
+      assert(canonRows(metrics.values) == first220(4), "upserted metrics must converge to batch metrics")
+    }
+  }
+
+  /** A checkpoint dir on the `flakytail:` filesystem. */
+  private def flakyDir(): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.flakytail.impl", classOf[FlakyTailFs].getName)
+    conf.set("fs.flakytail.impl.disable.cache", "true")
+    "flakytail:" + java.nio.file.Files.createTempDirectory("graft-flaky").toString
+  }
+
+  bothPaths("a failed tail commit fails the batch, and the restart replays it") {
+    val dir = flakyDir()
+    val (c1, c2) = sorted.take(220).splitAt(130)
+    val out = new Emitted
+    val job1 = new StreamingJob(SmaCrossStrategy, cfg, out.sinks, checkpointDir = Some(dir))
+    job1.processBatch(ticksOf(c1), 0L)
+    FlakyTailFs.failRenameAt.set(1)
+    try intercept[java.io.IOException](job1.processBatch(ticksOf(c2), 1L))
+    finally FlakyTailFs.failRenameAt.set(0)
+    assert(tailVersions(dir.stripPrefix("flakytail:")).map(_.getName) == Seq("v0"),
+      "a failed commit must leave the previous version")
+
+    val job2 = new StreamingJob(SmaCrossStrategy, cfg, out.sinks, checkpointDir = Some(dir))
+    job2.processBatch(ticksOf(c2), 1L) // the replay
+    out.assertFirst220()
+  }
+
+  bothPaths("a stop after the tail rename, before the cleanup, restarts from the newest version") {
+    val dir = flakyDir()
+    val (c1, rest) = sorted.splitAt(130)
+    val (c2, c3) = rest.splitAt(90)
+    val sig = mutable.ArrayBuffer[Row]()
+    val sinks = Sinks(signals = df => sig ++= df.collect())
+    val job1 = new StreamingJob(SmaCrossStrategy, cfg, sinks, checkpointDir = Some(dir))
+    job1.processBatch(ticksOf(c1), 0L)
+    FlakyTailFs.stopAtDeleteAt.set(1)
+    try intercept[java.io.IOException](job1.processBatch(ticksOf(c2), 1L))
+    finally FlakyTailFs.stopAtDeleteAt.set(0)
+    val local = dir.stripPrefix("flakytail:")
+    assert(tailVersions(local).map(_.getName) == Seq("v0", "v1"))
+
+    // c2 is not fed again: only v1 holds it, so loading v0 would break c3
+    val job2 = new StreamingJob(SmaCrossStrategy, cfg, sinks, checkpointDir = Some(dir))
+    job2.processBatch(ticksOf(c3), 2L)
+    assert(tailVersions(local).map(_.getName) == Seq("v2"))
+    assert(canonRows(sig) == canonRows(SmaCrossStrategy(ticksOf(rows), cfg).signals.collect()),
+      "signals across the stop must equal the batch run")
+  }
+
+  bothPaths("a parquet tail written before versioning is loaded once, then replaced by v0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-legacy").toString
+    val (c1, c2) = sorted.splitAt(200)
+    ticksOf(c1).write.parquet(s"$dir/graft-tail")
+    val sig = mutable.ArrayBuffer[Row]()
+    new StreamingJob(SmaCrossStrategy, cfg, Sinks(signals = df => sig ++= df.collect()),
+      checkpointDir = Some(dir)).processBatch(ticksOf(c2), 0L)
+
+    val fed = c2.map(t => (t.product_id, t.sequence)).toSet
+    val want = SmaCrossStrategy(ticksOf(rows), cfg).signals.collect()
+      .filter(r => fed((r.getAs[String]("instrument_id"), r.getAs[Long]("sequence"))))
+    assert(canonRows(sig) == canonRows(want), "signals after the parquet tail must equal batch")
+    assert(new java.io.File(dir, "graft-tail").list().filterNot(_.startsWith(".")).toSeq ==
+      Seq("v0"), "the first commit must replace the parquet tail")
   }
 
   bothPaths("a tick with no price and no quotes, or no sequence, fails the batch before any sink") {
