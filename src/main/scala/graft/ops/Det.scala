@@ -1,9 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructField}
 
 /** Deterministic, order-independent floating aggregation.
   *
@@ -103,15 +104,14 @@ object Det {
 
   /** Order-independent SUM: exact long-grid sum at scale s, finished as
     * `(double)Σk / 10^s` (rule 3). Exactness envelope: Σ|x|·10^s < 2^63. */
-  def sumD(c: Column, s: Int): Column =
-    sum(kl(c, s)).cast("double") / lit(pow10(s))
+  def sumD(c: Column, s: Int): Column = Split.sumD(c, s).agg
 
   /** Windowed [[sumD]] over a frame. */
   def sumD(c: Column, s: Int, frame: WindowSpec): Column =
     sum(kl(c, s)).over(frame).cast("double") / lit(pow10(s))
 
   /** Order-independent AVG = exact grid sum / non-null count. */
-  def avgD(c: Column, s: Int): Column = sumD(c, s) / count(c)
+  def avgD(c: Column, s: Int): Column = Split.avgD(c, s).agg
 
   /** Windowed [[avgD]] over a frame. */
   def avgD(c: Column, s: Int, frame: WindowSpec): Column =
@@ -197,10 +197,7 @@ object Det {
     * long). Matches STDDEV_POP semantics (0.0 for a single sample or
     * constant input, null only on empty).
     */
-  def stddevPopD(c: Column, e: Int): Column = {
-    val k = kl(c, e)
-    finishStd(sum(k), sum(k * k), count(c), e)
-  }
+  def stddevPopD(c: Column, e: Int): Column = Split.stddevPopD(c, e).agg
 
   /** Windowed variant of [[stddevPopD]] over a frame. */
   def stddevPopD(c: Column, e: Int, frame: WindowSpec): Column =
@@ -222,9 +219,104 @@ object Det {
   /** Σ of k² over rows where cond holds (k = x·10^e grid integer), finished
     * as double·10^-2e; 0.0 when no row matches. Used for downside variance
     * (Sortino). */
-  def sumSqWhereD(cond: Column, c: Column, e: Int): Column = {
-    val k = kl(c, e)
-    coalesce(sum(when(cond, k * k)).cast("double"), lit(0.0)) / lit(pow10(2 * e))
+  def sumSqWhereD(cond: Column, c: Column, e: Int): Column =
+    Split.sumSqWhereD(cond, c, e).agg
+
+  /** How the rows of one exact part combine: as Spark's `sum` of grid
+    * longs, `count` of non-null values, or `min` of doubles. `add` folds
+    * one row's value (null for a null) into the running value, starting
+    * from `zero`, by Spark's own rules, so a fold over rows gives Spark's
+    * value with Spark's result type (`field`):
+    *  - `Sum` adds with `Math.addExact`, throwing on overflow as ANSI
+    *    `sum` does, and stays null until a non-null value arrives;
+    *  - `Count` counts non-null values and is never null;
+    *  - `Min` is the one non-exact part. It keeps the first of equal
+    *    values (`-0.0` against `0.0`) and sorts NaN greatest
+    *    (`SQLOrderingUtil.compareDoubles`), so it repeats Spark's bits
+    *    when it folds the rows in the order Spark's one task reads them.
+    */
+  sealed abstract class Combine {
+    def agg(c: Column): Column
+    def zero: Any
+    def add(acc: Any, v: Any): Any
+    /** The combined column's field, from the per-row column's. */
+    def field(in: StructField): StructField
+  }
+
+  object Combine {
+    case object Sum extends Combine {
+      def agg(c: Column): Column = sum(c)
+      def zero: Any = null
+      def add(acc: Any, v: Any): Any =
+        if (v == null) acc
+        else if (acc == null) v
+        else Math.addExact(acc.asInstanceOf[Long], v.asInstanceOf[Long])
+      def field(in: StructField): StructField = {
+        require(in.dataType == LongType, s"Sum combines grid longs, not ${in.dataType}")
+        in.copy(nullable = true)
+      }
+    }
+    case object Count extends Combine {
+      def agg(c: Column): Column = count(c)
+      def zero: Any = 0L
+      def add(acc: Any, v: Any): Any = if (v == null) acc else acc.asInstanceOf[Long] + 1L
+      def field(in: StructField): StructField = in.copy(dataType = LongType, nullable = false)
+    }
+    case object Min extends Combine {
+      def agg(c: Column): Column = min(c)
+      def zero: Any = null
+      def add(acc: Any, v: Any): Any =
+        if (v == null) acc
+        else if (acc == null ||
+          SQLOrderingUtil.compareDoubles(v.asInstanceOf[Double], acc.asInstanceOf[Double]) < 0) v
+        else acc
+      def field(in: StructField): StructField = {
+        require(in.dataType == DoubleType, s"Min combines doubles, not ${in.dataType}")
+        in.copy(nullable = true)
+      }
+    }
+  }
+
+  /** One exact part of a [[Split]] aggregate: a per-row column and how
+    * rows combine it. */
+  final case class Part(in: Column, combine: Combine)
+
+  /** An aggregate split into its exact parts and its finish: the
+    * aggregate is the finish over Spark's aggregates of the parts
+    * (`agg`). A caller that combines the parts itself, such as
+    * StreamingJob's driver path, applies the same finish to columns
+    * that hold the combined values, and gets the same bits. */
+  final case class Split(parts: Seq[Part], finish: Seq[Column] => Column) {
+    def agg: Column = finish(parts.map(p => p.combine.agg(p.in)))
+  }
+
+  /** The splits behind the grouped builders above, and Spark's plain
+    * `count` and `min` as splits with an identity finish. */
+  object Split {
+    import Combine._
+
+    def sumD(c: Column, s: Int): Split =
+      Split(Seq(Part(kl(c, s), Sum)), { case Seq(k) => k.cast("double") / lit(pow10(s)) })
+
+    def avgD(c: Column, s: Int): Split =
+      Split(Seq(Part(kl(c, s), Sum), Part(c, Count)),
+        { case Seq(k, n) => k.cast("double") / lit(pow10(s)) / n })
+
+    def stddevPopD(c: Column, e: Int): Split = {
+      val k = kl(c, e)
+      Split(Seq(Part(k, Sum), Part(k * k, Sum), Part(c, Count)),
+        { case Seq(s1, s2, n) => finishStd(s1, s2, n, e) })
+    }
+
+    def sumSqWhereD(cond: Column, c: Column, e: Int): Split = {
+      val k = kl(c, e)
+      Split(Seq(Part(when(cond, k * k), Sum)),
+        { case Seq(s2) => coalesce(s2.cast("double"), lit(0.0)) / lit(pow10(2 * e)) })
+    }
+
+    def count(c: Column): Split = Split(Seq(Part(c, Count)), _.head)
+
+    def min(c: Column): Split = Split(Seq(Part(c, Min)), _.head)
   }
 
   /** Order-independent Pearson correlation over grid integers kx, ky:

@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.config.StrategyConfig
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.mutable
 
 /** Windowed strategy performance metrics.
   *
@@ -55,6 +57,13 @@ object Performance {
     * (performance.py:62-118). `signal_type` must be present on the input
     * rows (it is per-tick, exactly the rows crossover_signals would emit).
     *
+    * Each aggregate is a [[Det.Split]]: exact parts (long grid sums,
+    * counts, a min) and a finish over them, e.g. `(double)Σk / 10^s / n`.
+    * Here the finish reads Spark's aggregates of the parts, which is the
+    * plain Det builder; the driver form ([[windowParts]],
+    * [[combineWindows]], [[finishWindows]]) combines the same parts in
+    * Scala and applies the same finish, with no Spark job.
+    *
     * Why this is NOT a custom TypedImperativeAggregate: the 13 Det
     * aggregates below already compile to a single partial/final
     * HashAggregate pair — one map-side pass accumulating primitive long
@@ -73,38 +82,77 @@ object Performance {
     * single-pass-Aggregator rewrite is 8%, and the codegen eviction it
     * would cause costs more than that.
     */
-  def windows(returns: DataFrame, cfg: StrategyConfig): DataFrame =
+  def windows(returns: DataFrame, cfg: StrategyConfig): DataFrame = {
+    val aggs = Aggregates.map { case (name, a) => a.agg.as(name) }
     returns
       .groupBy(window(col("event_time"), cfg.metricsWindow).as("win"))
-      .agg(
-        // Additive aggregates go through Det (exact decimal sums) so the
-        // shuffle-merge order of partial aggregates can't change the bits;
-        // min/count are order-independent already.
-        Det.avgD(col("realized_pnl"), 12).as("avg_return"),
-        Det.stddevPopD(col("realized_pnl"), 5).as("volatility"),
-        Det.sumD(col("realized_pnl"), 12).as("cumulative_return"),
-        Det.sumSqWhereD(col("realized_pnl") < 0d, col("realized_pnl"), 5)
-          .as("downside_sum"),
-        count(col("realized_pnl")).as("sample_size"),
-        count(when(col("realized_pnl") < 0d, lit(1))).as("negative_samples"),
-        min(col("realized_pnl")).as("min_return"),
-        Det.avgD(col("notional_exposure"), 9).as("avg_notional_exposure"),
-        Det.avgD(col("unit_exposure"), 9).as("avg_unit_exposure"),
-        Det.sumD(col("trade_cost"), 12).as("total_trade_cost"),
-        Det.sumD(col("transaction_cost"), 12).as("total_transaction_cost"),
-        Det.sumD(col("slippage_cost"), 12).as("total_slippage_cost"),
-        // A2 folded in: COUNT(*) of non-HOLD signals per window.
-        count(when(col("signal_type") =!= "HOLD", lit(1))).as("trades_executed")
-      )
-      .select(
-        col("win.start").as("window_start"),
-        col("win.end").as("window_end"),
-        col("avg_return"), col("volatility"), col("cumulative_return"),
-        col("downside_sum"), col("sample_size"), col("negative_samples"),
-        col("min_return"), col("avg_notional_exposure"), col("avg_unit_exposure"),
-        col("total_trade_cost"), col("total_transaction_cost"),
-        col("total_slippage_cost"), col("trades_executed")
-      )
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("win.start").as("window_start") +: col("win.end").as("window_end") +:
+        Aggregates.map { case (name, _) => col(name) }: _*)
+  }
+
+  /** The window aggregates, in output order. Additive aggregates go
+    * through Det (exact long grid sums) so the shuffle-merge order of
+    * partial aggregates can't change the bits; count is order-independent
+    * already, and min is too up to the sign of a zero. */
+  private val Aggregates: Seq[(String, Det.Split)] = {
+    val pnl = col("realized_pnl")
+    Seq(
+      "avg_return" -> Det.Split.avgD(pnl, 12),
+      "volatility" -> Det.Split.stddevPopD(pnl, 5),
+      "cumulative_return" -> Det.Split.sumD(pnl, 12),
+      "downside_sum" -> Det.Split.sumSqWhereD(pnl < 0d, pnl, 5),
+      "sample_size" -> Det.Split.count(pnl),
+      "negative_samples" -> Det.Split.count(when(pnl < 0d, lit(1))),
+      "min_return" -> Det.Split.min(pnl),
+      "avg_notional_exposure" -> Det.Split.avgD(col("notional_exposure"), 9),
+      "avg_unit_exposure" -> Det.Split.avgD(col("unit_exposure"), 9),
+      "total_trade_cost" -> Det.Split.sumD(col("trade_cost"), 12),
+      "total_transaction_cost" -> Det.Split.sumD(col("transaction_cost"), 12),
+      "total_slippage_cost" -> Det.Split.sumD(col("slippage_cost"), 12),
+      // A2 folded in: COUNT(*) of non-HOLD signals per window.
+      "trades_executed" -> Det.Split.count(when(col("signal_type") =!= "HOLD", lit(1))))
+  }
+
+  /** Every aggregate's parts in order, named `p0`, `p1`, …. */
+  private val Parts: Seq[(String, Det.Part)] =
+    Aggregates.flatMap(_._2.parts).zipWithIndex.map { case (p, i) => s"p$i" -> p }
+
+  /** Driver form of [[windows]], step 1: each returns row's window bounds
+    * and per-row parts, a Project with no aggregate (over a
+    * `LocalRelation` the optimizer evaluates it without a Spark job). */
+  def windowParts(returns: DataFrame, cfg: StrategyConfig): DataFrame =
+    returns
+      .select(window(col("event_time"), cfg.metricsWindow).as("win") +:
+        Parts.map { case (name, p) => p.in.as(name) }: _*)
+      .select(col("win.start").as("window_start") +: col("win.end").as("window_end") +:
+        Parts.map { case (name, _) => col(name) }: _*)
+
+  /** Step 2: the schema of [[combineWindows]]' rows, from
+    * [[windowParts]]' schema: each part keeps Spark's aggregate type. */
+  def windowSchema(parts: StructType): StructType =
+    StructType(parts.fields.take(2) ++ Parts.map { case (name, p) =>
+      p.combine.field(parts(name)) })
+
+  /** Step 2: [[windowParts]]' rows combined per window, in Scala, folded
+    * in the rows' order; windows in order of their first row. */
+  def combineWindows(rows: Seq[Row]): Seq[Row] = {
+    val combines = Parts.map(_._2.combine).toArray
+    val acc = mutable.LinkedHashMap[(Any, Any), Array[Any]]()
+    rows.foreach { r =>
+      val a = acc.getOrElseUpdate((r.get(0), r.get(1)), combines.map(_.zero))
+      combines.indices.foreach(i => a(i) = combines(i).add(a(i), r.get(i + 2)))
+    }
+    acc.iterator.map { case ((start, end), a) => Row.fromSeq(start +: end +: a.toSeq) }.toSeq
+  }
+
+  /** Step 3: [[windows]]' output from per-window rows of
+    * [[windowSchema]], by the same finish expressions — a Project. */
+  def finishWindows(perWindow: DataFrame): DataFrame = {
+    val parts = Parts.iterator.map { case (name, _) => col(name) }
+    perWindow.select(col("window_start") +: col("window_end") +:
+      Aggregates.map { case (name, a) => a.finish(a.parts.map(_ => parts.next())).as(name) }: _*)
+  }
 
   /** metrics_enriched (performance.py:120-157). */
   def metrics(windows: DataFrame, cfg: StrategyConfig): DataFrame = {

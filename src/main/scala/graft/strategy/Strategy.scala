@@ -33,15 +33,15 @@ object SmaCrossStrategy extends Strategy {
   override def apply(raw: DataFrame, cfg: StrategyConfig): StrategyOutputs = {
     val enriched = SmaCross.enrich(Normalize(raw), cfg)
     val costs = Positions.costs(Positions.stream(enriched), cfg)
-    outputs(enriched, costs, costs, cfg)
+    outputs(enriched, costs, Performance(costs, cfg), cfg)
   }
 
   /** The per-row half of the strategy: the five outputs from ticks that
     * carry every window column (`enriched`), their costed positions
-    * (`costs`), and the costed rows the metrics windows aggregate —
-    * `costs` itself in batch; StreamingJob's driver path passes folded
-    * rows and the open windows' rows. */
-  def outputs(enriched: DataFrame, costs: DataFrame, metricsCosts: DataFrame,
+    * (`costs`), and the metric rows — `Performance` over `costs` in
+    * batch; StreamingJob's driver path passes folded rows and metrics
+    * finished from windows it combined itself. */
+  def outputs(enriched: DataFrame, costs: DataFrame, metrics: DataFrame,
               cfg: StrategyConfig): StrategyOutputs =
     StrategyOutputs(
       normalized = enriched.select(
@@ -51,7 +51,7 @@ object SmaCrossStrategy extends Strategy {
         .filter(col("signal_type") =!= "HOLD"), // P12, sma_cross.py:393
       positions = Positions.transitions(costs, cfg),
       executions = Positions.executions(costs, cfg),
-      metrics = Performance(metricsCosts, cfg))
+      metrics = metrics)
 }
 
 /** Name → strategy registry, mirroring the reference's module registry +

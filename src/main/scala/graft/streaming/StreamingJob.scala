@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.config.StrategyConfig
-import graft.ops.{Adaptive, Normalize, Positions}
+import graft.ops.{Adaptive, Normalize, Performance, Positions}
 import graft.strategy.{SmaCrossStrategy, Strategy, StrategyOutputs}
 import org.apache.spark.sql.{DataFrame, LocalRebind, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -49,10 +49,11 @@ final case class Sinks(
   *    [[SmaStep]]; the four row sinks get one `LocalRelation` of the
   *    emitted folded rows, the per-row columns (costs, clamps, `to_json`
   *    metadata) stay the strategy's own Spark expressions
-  *    ([[SmaCrossStrategy.outputs]]), and metrics are one Spark `groupBy`
-  *    over the open windows' folded rows. One Spark job per batch (the
-  *    metrics aggregate), plus the fetch when the batch is not already
-  *    local.
+  *    ([[SmaCrossStrategy.outputs]]), and metrics are `Performance`'s
+  *    driver form over the open windows' folded rows: their exact per-row
+  *    parts, combined per window on the driver, then finished by the same
+  *    expressions as the batch aggregate. No Spark job per batch, except
+  *    the fetch when the batch is not already local.
   *  - Spark path (larger batches, other strategies, or
   *    `graft.force.distributed` / `SPARK_GRAFT_FORCE_DISTRIBUTED` through
   *    [[Adaptive.threshold]]): the held tail becomes a `LocalRelation`,
@@ -359,25 +360,33 @@ object StreamingJob {
   private final case class Held(tick: Tick, folded: Row)
 
   /** The driver path's sink frames, built and analysed once per session
-    * over two template leaves — the emitted rows and the open windows'
-    * rows — and re-pointed at each batch's folded rows (building them
-    * afresh per batch added ~350 ms of live_feed tick latency on a 4-core
-    * host). The per-row columns are SmaCrossStrategy's own
-    * (`outputs`, and Positions' per-row halves around the folded
-    * `position`/`prev_position`); the metrics groupBy reads one
-    * partition, so it runs as one job without a shuffle. */
+    * over three template leaves — the emitted rows, the open windows'
+    * rows and their per-window parts — and re-pointed at each batch's
+    * rows (building them afresh per batch added ~350 ms of live_feed
+    * tick latency on a 4-core host). The per-row columns are
+    * SmaCrossStrategy's own (`outputs`, and Positions' per-row halves
+    * around the folded `position`/`prev_position`). Metrics take
+    * `Performance`'s driver form: the open windows' per-row parts, a
+    * Project over their `LocalRelation`, are combined per window on the
+    * driver and finished by `Performance`'s own expressions. No step is
+    * a Spark job. */
   private final class DriverPlans(val spark: SparkSession, cfg: StrategyConfig) {
     private def costsOf(folded: DataFrame): DataFrame =
       Positions.costRows(Positions.streamRows(folded, col("position")), cfg, col("prev_position"))
     private val emitted = LocalRebind.template(spark, FoldedSchema)
     private val windows = LocalRebind.template(spark, FoldedSchema)
-    private val out = SmaCrossStrategy.outputs(
-      emitted, costsOf(emitted), costsOf(windows).coalesce(1), cfg)
+    private val parts =
+      Performance.windowParts(Performance.positionReturns(costsOf(windows)), cfg)
+    private val perWindow = LocalRebind.template(spark, Performance.windowSchema(parts.schema))
+    private val out = SmaCrossStrategy.outputs(emitted, costsOf(emitted),
+      Performance.metrics(Performance.finishWindows(perWindow), cfg), cfg)
 
     def bind(emittedRows: Seq[Row], windowRows: Seq[Row]): StrategyOutputs = {
+      val Seq(rowParts) = LocalRebind(Seq(parts), Seq(windows -> windowRows))
       val Seq(normalized, signals, positions, executions, metrics) = LocalRebind(
         Seq(out.normalized, out.signals, out.positions, out.executions, out.metrics),
-        Seq(emitted -> emittedRows, windows -> windowRows))
+        Seq(emitted -> emittedRows,
+          perWindow -> Performance.combineWindows(rowParts.collect().toSeq)))
       StrategyOutputs(normalized, signals, positions, executions, metrics)
     }
   }

@@ -3,6 +3,8 @@ package graft.streaming
 import graft.TestSpark
 import graft.config.StrategyConfig
 import graft.strategy.SmaCrossStrategy
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -379,6 +381,26 @@ class StreamingJobSpec extends AnyFunSuite {
         assert(canonRows(got) == canonRows(want.collect()), s"$name must match batch run") }
     assert(canonRows(metBuf.values) == canonRows(batchOut.metrics.collect()),
       "upserted metrics must converge to batch metrics")
+  }
+
+  test("small driver-path batches start no Spark job") {
+    val sc = spark.sparkContext
+    val out = new Emitted
+    val job = new StreamingJob(SmaCrossStrategy, cfg, out.sinks, checkpointDir =
+      Some(java.nio.file.Files.createTempDirectory("graft-zero-job").toString))
+    val batches = sorted.take(220).grouped(55).map(ticksOf).toSeq
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      batches.foreach(job.feedBatch)
+      ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(started.get == 0, s"${started.get} Spark jobs started in ${batches.size} batches")
+    out.assertFirst220()
   }
 
   test("tail size covers every rolling operator's lookback") {
