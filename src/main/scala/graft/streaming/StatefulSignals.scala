@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** True per-row streaming signal generation with keyed state — the
-  * `flatMapGroupsWithState` alternative to StreamingJob's tail-recompute
+  * `flatMapGroupsWithState` alternative to StreamingJob's carried tail
   * (SURVEY §4: Flink's StreamExecOverAggregate has no Spark physical
-  * equivalent; the two idiomatic replacements are (a) foreachBatch
-  * recompute [StreamingJob] and (b) a per-key ring buffer of the last
-  * slow-window mids [this]). Use (b) when per-event latency matters more
-  * than full-sink fan-out: each tick is one [[SmaStep]] — ring buffers
-  * with running exact sums, O(1) per tick — and nothing is recomputed.
+  * equivalent; the two idiomatic replacements are (a) foreachBatch that
+  * refolds a carried raw tail with each batch [StreamingJob] and (b) a
+  * per-key ring buffer of the last slow-window mids [this]). Use (b) when
+  * per-event latency matters more than full-sink fan-out: each tick is one
+  * [[SmaStep]], O(1) with running exact sums, and nothing is refolded.
   *
   * Numeric contract: identical bits to the batch pipeline. Sums are kept
   * as exact scaled Longs (mid·10⁹ for SMAs, grid integers for the
@@ -22,8 +22,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Event-time caveat: rows are sorted within each micro-batch per key;
   * rows arriving after their key's state has advanced past them are
-  * dropped (watermark-style), unlike the tail-recompute job which can
-  * reorder within its carried tail.
+  * dropped (watermark-style), unlike StreamingJob, which refolds its
+  * carried tail and so can reorder within it.
   */
 object StatefulSignals {
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import graft.config.StrategyConfig
 import graft.ops.{Adaptive, Normalize, Performance, Positions}
-import graft.strategy.{SmaCrossStrategy, Strategy, StrategyOutputs}
-import org.apache.spark.sql.{DataFrame, LocalRebind, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.strategy.{SmaCrossStrategy, Strategy}
+import org.apache.spark.sql.{DataFrame, Encoders, LocalRebind, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -25,10 +24,11 @@ final case class Sinks(
     executions: DataFrame => Unit = _ => (),
     metrics: DataFrame => Unit = _ => ())
 
-/** Structured-Streaming runner for a [[Strategy]]: ONE input stream, ONE
-  * foreachBatch, five sinks — the multi-sink single-DAG obligation
+/** Structured-Streaming runner for [[SmaCrossStrategy]]: ONE input stream,
+  * ONE foreachBatch, five sinks — the multi-sink single-DAG obligation
   * (SURVEY §4): every sink reads the same micro-batch input instead of
-  * five independent queries re-reading the source.
+  * five independent queries re-reading the source. Any other strategy
+  * is refused at construction: the keyed step is SmaCross's arithmetic.
   *
   * Cross-batch correctness: the rolling operators (SMAs, volatility,
   * confirmation lag, prev-position) look back up to
@@ -41,25 +41,27 @@ final case class Sinks(
   * StreamingJobSpec). State is ≤ tailRows × live instruments raw rows
   * plus the open window; instruments idle past `idleStateTtl` are evicted.
   *
-  * Two paths, one gate. One `take(gate + 1)` per micro-batch is the
-  * emptiness check, the size probe and, under the gate, the whole fetch:
-  *  - driver path (≤ [[StreamingJob.DriverBatchRows]] rows, SmaCross
-  *    only): the tail lives on the driver per product. Each instrument of
-  *    the batch folds its tail plus its new ticks once through
-  *    [[SmaStep]]; the four row sinks get one `LocalRelation` of the
-  *    emitted folded rows, the per-row columns (costs, clamps, `to_json`
-  *    metadata) stay the strategy's own Spark expressions
-  *    ([[SmaCrossStrategy.outputs]]), and metrics are `Performance`'s
-  *    driver form over the open windows' folded rows: their exact per-row
-  *    parts, combined per window on the driver, then finished by the same
-  *    expressions as the batch aggregate. No Spark job per batch, except
-  *    the fetch when the batch is not already local.
-  *  - Spark path (larger batches, other strategies, or
-  *    `graft.force.distributed` / `SPARK_GRAFT_FORCE_DISTRIBUTED` through
-  *    [[Adaptive.threshold]]): the held tail becomes a `LocalRelation`,
-  *    tail ∪ batch is persisted, the strategy runs over it and each sink
-  *    reads its slice; the next tail (bounded by tailRows × live keys plus
-  *    the open window) is collected back to the driver.
+  * One keyed step on both sides of one gate. Per instrument it folds the
+  * held tail plus the new ticks once through [[SmaStep]] and yields three
+  * suffixes of the folded rows: the rows to emit, the rows of the metrics
+  * windows the batch may refine, and the next tail, trimmed at the
+  * batch's high-water mark. A held instrument without new ticks takes it
+  * too (its open window, TTL eviction). The row sinks read
+  * [[SmaCrossStrategy.outputs]] over the emitted rows and metrics are
+  * `Performance` over the windows' rows, analysed once per session for
+  * both sides. One `take(gate + 1)` per micro-batch is the emptiness
+  * check, the size probe and, under the gate, the whole fetch:
+  *  - driver path (≤ [[StreamingJob.DriverBatchRows]] rows): the step runs
+  *    on the driver, which holds the folded tail (an instrument without
+  *    new ticks is not refolded); the sinks read `LocalRelation`s and
+  *    metrics combine `Performance`'s exact per-row parts on the driver.
+  *    No Spark job, except the fetch when the batch is not already local.
+  *  - Spark path (larger batches, or `graft.force.distributed` /
+  *    `SPARK_GRAFT_FORCE_DISTRIBUTED` through [[Adaptive.threshold]]): a
+  *    scalar job finds the high-water mark, then the step runs in
+  *    `groupByKey(product_id).flatMapGroups` over the batch and the held
+  *    tail's rows, tagged by origin; its output is persisted once for
+  *    every sink, and the next tail is collected to the driver.
   * Both paths keep the one driver-held tail, so the state needs no
   * hand-over at the gate. Both emit the same rows, so sinks cannot tell
   * them apart; a tick neither can fold (no sequence, or no price and no
@@ -67,7 +69,7 @@ final case class Sinks(
   *
   * Event time: watermark bounds disorder at the source (T1,
   * __main__.py:63); rows later than the watermark may still reach
-  * foreachBatch and are handled by recomputation within the tail, matching
+  * foreachBatch and are handled by refolding within the tail, matching
   * the reference's drop-after-watermark envelope (T3).
   *
   * Exactly-once through the fan-out: with a checkpoint dir the tail is
@@ -94,6 +96,9 @@ final class StreamingJob(
     idleStateTtl: String = "6 hours") extends Serializable {
   import StreamingJob._
 
+  require(strategy eq SmaCrossStrategy,
+    s"StreamingJob folds ${SmaCrossStrategy.name}'s keyed step; it cannot run '${strategy.name}'")
+
   /** Rows of per-key history that fully determine every rolling operator. */
   val tailRows: Int =
     math.max(cfg.smaSlowWindow, Normalize.VolatilityLookback) + cfg.confirmation + 1
@@ -105,8 +110,6 @@ final class StreamingJob(
     * __main__.py:45): tail rows of instruments idle longer than this are
     * evicted, bounding state to active keys. */
   val idleStateTtlMs: Long = EventTime.durationMs(idleStateTtl)
-
-  private def windowStartMs(tsMs: Long): Long = tsMs - Math.floorMod(tsMs, metricsWindowMs)
 
   @volatile private var tail: Option[HeldTail] = None
   @volatile private var tailLoaded = false
@@ -126,11 +129,10 @@ final class StreamingJob(
     tail = next
   }
 
-  /** One micro-batch: fetch up to gate + 1 rows, then fold on the driver
-    * or recompute in Spark. */
+  /** One micro-batch: fetch up to gate + 1 rows, then take the keyed step
+    * on the driver or in executors. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    // the driver fold is SmaCross's keyed step; other strategies recompute
-    val gate = if (strategy eq SmaCrossStrategy) Adaptive.threshold(DriverBatchRows) else -1L
+    val gate = Adaptive.threshold(DriverBatchRows)
     val checked = batch.withColumn("price", checkedPrice)
     val fetched = checked.select(TailCols: _*).take(math.max(gate, 0L).toInt + 1)
     if (fetched.isEmpty) return
@@ -144,140 +146,58 @@ final class StreamingJob(
     else sparkBatch(checked)
   }
 
-  private def emit(out: StrategyOutputs): Unit = {
-    sinks.normalized(out.normalized)
-    sinks.signals(out.signals)
-    sinks.positions(out.positions)
-    sinks.executions(out.executions)
-    sinks.metrics(out.metrics)
-  }
+  /** The five sink frames, in [[Sinks]]' order. */
+  private def emit(frames: Seq[DataFrame]): Unit =
+    Seq(sinks.normalized, sinks.signals, sinks.positions, sinks.executions, sinks.metrics)
+      .zip(frames).foreach { case (sink, df) => sink(df) }
 
-  /** Driver path: fold each instrument of the batch once, hand the sinks
-    * `LocalRelation` frames, keep the trimmed tail on the driver. */
+  /** The keyed step of a batch whose high-water mark is `maxUs`. */
+  private def stepTo(maxUs: Long): KeyStep =
+    KeyStep(cfg, tailRows, metricsWindowMs, idleStateTtlMs, tail.map(_.maxUs), maxUs)
+
+  /** Driver path: the step per held or fed instrument, `LocalRelation`
+    * frames for the sinks, the trimmed tail kept on the driver. */
   private def driverBatch(spark: SparkSession, ticks: Seq[Tick]): Unit = {
-    val prior = tail
-    val held = prior.fold(Map.empty[String, Vector[Held]])(_.keys)
+    val held = tail.fold(Map.empty[String, Vector[Held]])(_.keys)
     val byKey = ticks.groupBy(_.product)
-    val refolded = byKey.map { case (k, ts) =>
-      k -> fold(held.getOrElse(k, Vector.empty).map(_.tick) ++ ts, cfg)
+    val maxUs = (ticks.iterator.map(_.us) ++ tail.map(_.maxUs)).max
+    val step = stepTo(maxUs)
+    val keyed = (held.keySet ++ byKey.keySet).toSeq.map { k =>
+      val hs = held.getOrElse(k, Vector.empty)
+      k -> step(hs.view.map(_.tick), hs, byKey.getOrElse(k, Nil))
     }
-    // everything at or after the batch's first (event_time, sequence) per
-    // product is (re-)emitted — the Spark path's `newOnly`
-    val emitted = byKey.toSeq.flatMap { case (k, ts) =>
-      val lo = ts.minBy(t => (t.us, t.seq))
-      refolded(k).filter(h => h.tick.us > lo.us || (h.tick.us == lo.us && h.tick.seq >= lo.seq))
-    }
-    val keys = held ++ refolded
-    // Metrics: windows at or after the previous batch's open window, over
-    // every instrument's held rows (all of them are in the tail); with no
-    // earlier state, every window of this batch.
-    val windowRows = prior match {
-      case Some(p) =>
-        val fromMs = windowStartMs(Math.floorDiv(p.maxUs, 1000L))
-        keys.valuesIterator.flatMap(_.reverseIterator
-          .takeWhile(h => windowStartMs(Math.floorDiv(h.tick.us, 1000L)) >= fromMs)).toSeq
-      case None => refolded.valuesIterator.flatten.toSeq
-    }
-    emit(driverPlans(spark).bind(emitted.map(_.folded), windowRows.map(_.folded)))
-
-    val maxUs = (ticks.iterator.map(_.us) ++ prior.map(_.maxUs)).max
-    commit(Some(HeldTail(keys.flatMap { case (k, hs) =>
-      Some(trim(hs, maxUs)).filter(_.nonEmpty).map(k -> _)
-    }, maxUs)))
+    emit(sinkPlans(spark).local(keyed.flatMap(_._2.emitted), keyed.flatMap(_._2.windows)))
+    commit(Some(HeldTail(keyed.collect { case (k, s) if s.kept.nonEmpty => k -> s.kept }.toMap,
+      maxUs)))
   }
 
-  @volatile private var plans: Option[DriverPlans] = None
+  @volatile private var plans: Option[SinkPlans] = None
 
-  private def driverPlans(spark: SparkSession): DriverPlans =
+  private def sinkPlans(spark: SparkSession): SinkPlans =
     plans.filter(_.spark eq spark).getOrElse {
-      val p = new DriverPlans(spark, cfg)
+      val p = new SinkPlans(spark, cfg)
       plans = Some(p)
       p
     }
 
-  /** The Spark path's tail rule per key, on rows in (event_time, sequence)
-    * order: every row of the open metrics window plus `tailRows` older
-    * ones, none idle past the TTL. Second-truncated times, as the Spark
-    * path's `cast("long") * 1000` compares them. */
-  private def trim(hs: Vector[Held], maxUs: Long): Vector[Held] = {
-    def secMs(h: Held) = Math.floorDiv(h.tick.us, 1000000L) * 1000L
-    val maxEventMs = Math.floorDiv(maxUs, 1000L)
-    val openStartMs = windowStartMs(maxEventMs)
-    val firstOpen = hs.lastIndexWhere(secMs(_) < openStartMs) + 1
-    val firstLive = hs.indexWhere(secMs(_) >= maxEventMs - idleStateTtlMs) match {
-      case -1 => hs.size
-      case i => i
-    }
-    hs.drop(math.max(firstOpen - tailRows, firstLive))
-  }
-
-  /** Spark path: prepend the tail, run the strategy once over the
-    * persisted input, fan out. */
+  /** Spark path: the step in executors over the batch and the held tail,
+    * its output persisted once and read by every sink, then the next tail
+    * collected. The output is unpersisted even when a sink throws. */
   private def sparkBatch(batch: DataFrame): Unit = {
     val spark = batch.sparkSession
-    val tailFrame = tail.map(_.frame(spark))
-    // The tail carries every row of the still-open metrics window, so its
-    // high-water mark is the previous batch's; windows at or after its
-    // window-start were NOT final then and are re-emitted refined. One
-    // scalar job gives the batch's max event time.
-    val tailMaxMs = tail.map(t => Math.floorDiv(t.maxUs, 1000L))
-    val prevOpenStartMs = tailMaxMs.map(windowStartMs)
-    val maxEventMs = (tailMaxMs.toSeq :+
-      batch.agg(max(col("event_time"))).head().getTimestamp(0).getTime).max
-    val withTail = tailFrame match {
-      // A replayed batch (crash after the tail was persisted but before the
-      // micro-batch committed) is already inside the tail: keep one copy of
-      // each (product_id, sequence) tick, or the rolling SMAs/volatility
-      // would run over doubled rows and upsert wrong values. Duplicate keys
-      // only ever carry identical rows (a tick is immutable), so which copy
-      // survives is immaterial.
-      case Some(t) => t.unionByName(batch.select(t.columns.map(col).toIndexedSeq: _*))
-        .dropDuplicates("product_id", "sequence")
-      case None => batch
-    }
-    val input = withTail.persist(StorageLevel.MEMORY_AND_DISK)
-    val openStartMs = windowStartMs(maxEventMs)
-
-    // Lower bound of new data per key: everything >= the batch's first
-    // (event_time, sequence) per product is (re-)emitted.
-    val bounds = batch.groupBy(col("product_id")).agg(
-      min(struct(col("event_time"), col("sequence"))).as("lo"))
-    def newOnly(df: DataFrame, timeCol: String, keyCol: String = "product_id"): DataFrame = {
-      val cols = df.columns.toIndexedSeq
-      df.join(broadcast(bounds.withColumnRenamed("product_id", keyCol)), Seq(keyCol))
-        .filter(struct(col(timeCol), col("sequence")) >= col("lo"))
-        .select(cols.map(col): _*)
-    }
-
-    val out: StrategyOutputs = strategy(input, cfg)
-    // Metrics: emit only windows fully covered by this input — i.e. not
-    // finalized before the previous batch's open window. Earlier windows
-    // already received their final upsert; rows later than that horizon
-    // are dropped from metrics (T3 drop-after-watermark envelope).
-    emit(StrategyOutputs(
-      newOnly(out.normalized, "event_time"),
-      newOnly(out.signals, "signal_time", keyCol = "instrument_id"),
-      newOnly(out.positions, "event_time"),
-      newOnly(out.executions, "signal_time"),
-      prevOpenStartMs.fold(out.metrics)(ms => out.metrics.filter(
-        col("metric_time").cast("long") * 1000L >= lit(ms + metricsWindowMs)))))
-
-    // New tail per key = every row of the open metrics window (so the next
-    // batch can refine it) + tailRows older rows (rolling-operator lookback).
-    val older = Window.partitionBy(col("product_id"))
-      .orderBy(col("event_time").desc, col("sequence").desc)
-    val nextTail = input
-      .withColumn("__rn", row_number().over(older))
-      .withColumn("__openRows", sum(
-        when(col("event_time").cast("long") * 1000L >= lit(openStartMs), 1)
-          .otherwise(0)).over(older.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter((col("event_time").cast("long") * 1000L >= lit(openStartMs) ||
-        col("__rn") - col("__openRows") <= tailRows) &&
-        col("event_time").cast("long") * 1000L >= lit(maxEventMs - idleStateTtlMs))
-      .select(TailCols: _*)
-      .collect()
-    input.unpersist()
-    commit(HeldTail.of(nextTail.toSeq.map(Tick.of), cfg))
+    // one scalar job: trim needs the batch's high-water mark in every group
+    val maxUs = (tail.map(_.maxUs).toSeq :+
+      EventTime.micros(batch.agg(max(col("event_time"))).head().getTimestamp(0))).max
+    val fed = batch.select(TailCols :+ lit(false).as("held"): _*)
+    val input = tail.fold(fed)(t => fed.unionByName(spark.createDataFrame(
+      t.rows.map(r => Row.fromSeq(r.toSeq :+ true)).asJava, TailSchema.add("held", BooleanType))))
+    val out = foldGroups(input, stepTo(maxUs)).persist(StorageLevel.MEMORY_AND_DISK)
+    val kept = try {
+      def rows(role: String) = out.filter(col(role)).select(FoldedSchema.fieldNames.map(col): _*)
+      emit(sinkPlans(spark).distributed(rows("emit"), rows("window")))
+      out.filter(col("keep")).select(TailCols: _*).collect()
+    } finally out.unpersist()
+    commit(HeldTail.of(kept.toSeq.map(Tick.of), cfg))
   }
 
   /** Feed one pre-built micro-batch directly — the paced-replay consumer
@@ -304,12 +224,14 @@ final class StreamingJob(
 
 object StreamingJob {
 
-  /** The driver path's gate: micro-batches of at most this many ticks are
-    * folded on the driver. Measured crossover (perfbench live_feed
-    * fixture, five collecting sinks, 4-core local[4]): the driver fold
-    * is faster through 30,000 ticks per batch (5.4 s vs 6.3 s medians)
-    * and slower at 40,000 (7.0 s vs 6.1 s). */
-  val DriverBatchRows = 30000L
+  /** The driver path's gate: micro-batches of at most this many ticks
+    * take the keyed step on the driver. Measured crossover (perfbench
+    * live_feed fixture, five collecting sinks, a checkpoint, 4-core
+    * local[4], medians of 3 batches in each of two runs): the driver is
+    * faster through 3,000 ticks (0.88–0.95 s vs 1.37–1.42 s), even at
+    * 5,000 (1.17–1.38 s vs 1.15–1.47 s) and slower from 7,500 (1.56–1.66
+    * s vs 1.24–1.52 s) and at 10,000 (1.90–1.91 s vs 1.39–1.46 s). */
+  val DriverBatchRows = 5000L
 
   private val TailSchema = TailStore.Schema
   private val TailCols = TailStore.Columns
@@ -330,11 +252,15 @@ object StreamingJob {
     Seq("mid_price", "best_bid", "best_ask", "returns", "volatility", "fast_sma", "slow_sma",
       "spread", "prev_spread", "position", "prev_position").map(StructField(_, DoubleType)))
 
+  /** The Spark path's step output: a folded row, its raw `price` (for
+    * the next tail) and the roles it takes, each row once. */
+  private val StepSchema = StructType(FoldedSchema.fields ++ Seq(StructField("price", DoubleType)) ++
+    Seq("emit", "window", "keep").map(StructField(_, BooleanType, nullable = false)))
+
   /** Driver-held tail: per product, its ticks in (event_time, sequence)
     * order with their folded rows; `maxUs` is the high-water mark. */
   private final case class HeldTail(keys: Map[String, Vector[Held]], maxUs: Long) {
     def rows: Seq[Row] = keys.valuesIterator.flatten.map(_.tick.row).toSeq
-    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, TailSchema)
   }
   private object HeldTail {
     def of(ticks: Seq[Tick], cfg: StrategyConfig): Option[HeldTail] =
@@ -359,18 +285,83 @@ object StreamingJob {
 
   private final case class Held(tick: Tick, folded: Row)
 
-  /** The driver path's sink frames, built and analysed once per session
-    * over three template leaves — the emitted rows, the open windows'
+  /** The per-key step of one micro-batch, the same on both gate sides.
+    * `priorMaxUs` is the held tail's high-water mark (none before the
+    * first batch), `maxUs` this batch's. */
+  private final case class KeyStep(cfg: StrategyConfig, tailRows: Int, windowMs: Long,
+      ttlMs: Long, priorMaxUs: Option[Long], maxUs: Long) {
+    private def windowStartMs(ms: Long) = ms - Math.floorMod(ms, windowMs)
+    // Metrics: every window at or after the previous batch's open window,
+    // whose rows are all held; earlier windows had their final upsert, and
+    // a late row in one is left out (T3 drop-after-watermark envelope).
+    // With no earlier state, every window.
+    private val fromMs =
+      priorMaxUs.fold(Long.MinValue)(us => windowStartMs(Math.floorDiv(us, 1000L)))
+
+    /** One key: `held` are its held ticks and `folded` their fold, which a
+      * key with no new `ticks` keeps (it is not refolded); otherwise held
+      * ++ new ticks are folded once and everything at or after the first
+      * new (event_time, sequence) is (re-)emitted. */
+    def apply(held: Iterable[Tick], folded: => Vector[Held], ticks: Seq[Tick]): Keyed =
+      if (ticks.isEmpty) keyed(folded, folded.size)
+      else {
+        val rows = fold(held ++ ticks, cfg)
+        val lo = ticks.minBy(t => (t.us, t.seq))
+        keyed(rows, rows.lastIndexWhere(h =>
+          h.tick.us < lo.us || (h.tick.us == lo.us && h.tick.seq < lo.seq)) + 1)
+      }
+
+    /** The tail rule: every row of the open metrics window plus `tailRows`
+      * older ones, none idle past the TTL, times compared in whole
+      * seconds. */
+    private def keyed(rows: Vector[Held], emitFrom: Int): Keyed = {
+      def secMs(h: Held) = Math.floorDiv(h.tick.us, 1000000L) * 1000L
+      val maxMs = Math.floorDiv(maxUs, 1000L)
+      val firstOpen = rows.lastIndexWhere(secMs(_) < windowStartMs(maxMs)) + 1
+      val firstLive = rows.segmentLength(secMs(_) < maxMs - ttlMs)
+      Keyed(rows, emitFrom,
+        rows.lastIndexWhere(h => windowStartMs(Math.floorDiv(h.tick.us, 1000L)) < fromMs) + 1,
+        math.max(firstOpen - tailRows, firstLive))
+    }
+  }
+
+  /** One key's folded rows in (event_time, sequence) order and where each
+    * use of them starts: the emitted rows, the metrics windows' rows and
+    * the next tail are each a suffix. */
+  private final case class Keyed(rows: Vector[Held], emitFrom: Int, windowFrom: Int,
+      keepFrom: Int) {
+    def emitted: Seq[Row] = rows.drop(emitFrom).map(_.folded)
+    def windows: Seq[Row] = rows.drop(windowFrom).map(_.folded)
+    def kept: Vector[Held] = rows.drop(keepFrom)
+    /** The Spark path's rows, in [[StepSchema]]. */
+    def tagged: Iterator[Row] =
+      rows.indices.iterator.drop(emitFrom min windowFrom min keepFrom).map { i =>
+        Row.fromSeq(rows(i).folded.toSeq ++
+          Seq(rows(i).tick.price, i >= emitFrom, i >= windowFrom, i >= keepFrom))
+      }
+  }
+
+  /** The Spark path's step: per product, over its fed rows and its held
+    * tail's (the `held` column tags which), every row of [[StepSchema]]. */
+  private def foldGroups(input: DataFrame, step: KeyStep): DataFrame =
+    input.groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
+      .flatMapGroups { (_: String, rows: Iterator[Row]) =>
+        val (held, fed) = rows.toVector.partition(_.getBoolean(6))
+        val tail = held.map(Tick.of)
+        step(tail, fold(tail, step.cfg), fed.map(Tick.of)).tagged
+      }(Encoders.row(StepSchema)).toDF()
+
+  /** The sink frames of both sides, built and analysed once per session
+    * over template leaves — the emitted folded rows, the metrics windows'
     * rows and their per-window parts — and re-pointed at each batch's
-    * rows (building them afresh per batch added ~350 ms of live_feed
-    * tick latency on a 4-core host). The per-row columns are
-    * SmaCrossStrategy's own (`outputs`, and Positions' per-row halves
-    * around the folded `position`/`prev_position`). Metrics take
-    * `Performance`'s driver form: the open windows' per-row parts, a
-    * Project over their `LocalRelation`, are combined per window on the
-    * driver and finished by `Performance`'s own expressions. No step is
-    * a Spark job. */
-  private final class DriverPlans(val spark: SparkSession, cfg: StrategyConfig) {
+    * rows or frames (building them afresh per batch added ~350 ms of
+    * live_feed tick latency on a 4-core host). The four row sinks are
+    * SmaCrossStrategy's per-row columns (Positions' per-row halves around
+    * the folded `position`/`prev_position`). Metrics are `Performance`
+    * over the windows' rows; on the driver, its driver form: the per-row
+    * parts, a Project over their `LocalRelation`, combined per window on
+    * the driver and finished by `Performance`'s own expressions. */
+  private final class SinkPlans(val spark: SparkSession, cfg: StrategyConfig) {
     private def costsOf(folded: DataFrame): DataFrame =
       Positions.costRows(Positions.streamRows(folded, col("position")), cfg, col("prev_position"))
     private val emitted = LocalRebind.template(spark, FoldedSchema)
@@ -380,25 +371,29 @@ object StreamingJob {
     private val perWindow = LocalRebind.template(spark, Performance.windowSchema(parts.schema))
     private val out = SmaCrossStrategy.outputs(emitted, costsOf(emitted),
       Performance.metrics(Performance.finishWindows(perWindow), cfg), cfg)
+    private val rowSinks = Seq(out.normalized, out.signals, out.positions, out.executions)
+    private val sparkMetrics = Performance(costsOf(windows), cfg)
 
-    def bind(emittedRows: Seq[Row], windowRows: Seq[Row]): StrategyOutputs = {
+    /** Driver path: no step is a Spark job. */
+    def local(emittedRows: Seq[Row], windowRows: Seq[Row]): Seq[DataFrame] = {
       val Seq(rowParts) = LocalRebind(Seq(parts), Seq(windows -> windowRows))
-      val Seq(normalized, signals, positions, executions, metrics) = LocalRebind(
-        Seq(out.normalized, out.signals, out.positions, out.executions, out.metrics),
-        Seq(emitted -> emittedRows,
-          perWindow -> Performance.combineWindows(rowParts.collect().toSeq)))
-      StrategyOutputs(normalized, signals, positions, executions, metrics)
+      LocalRebind(rowSinks :+ out.metrics, Seq(emitted -> emittedRows,
+        perWindow -> Performance.combineWindows(rowParts.collect().toSeq)))
     }
+
+    /** Spark path: the same row sinks over distributed frames. */
+    def distributed(emittedRows: DataFrame, windowRows: DataFrame): Seq[DataFrame] =
+      LocalRebind.onto(rowSinks :+ sparkMetrics, Seq(emitted -> emittedRows, windows -> windowRows))
   }
 
   /** One instrument's ticks, one copy per sequence (a replayed batch is
     * already in the tail), folded once in (event_time, sequence) order. */
-  private def fold(ticks: Seq[Tick], cfg: StrategyConfig): Vector[Held] = {
+  private def fold(ticks: Iterable[Tick], cfg: StrategyConfig): Vector[Held] = {
     val step = new SmaStep(cfg)
-    ticks.distinctBy(_.seq).sortBy(t => (t.us, t.seq)).iterator.map { t =>
+    ticks.iterator.distinctBy(_.seq).toVector.sortBy(t => (t.us, t.seq)).map { t =>
       val o = step(t.mid)
       Held(t, Row(t.product, t.time, t.seq, o.mid, t.bid, t.ask, o.returns, o.volatility,
         o.fastSma, o.slowSma, o.spread, o.prevSpread, o.position, o.prevPosition))
-    }.toVector
+    }
   }
 }

@@ -17,9 +17,9 @@ import scala.collection.mutable
   * carried tail).
   *
   * Every case runs on both sides of the job's size gate: as written
-  * (the fixtures' batches fold on the driver) and again with
-  * `graft.force.distributed` set, which sends every batch down the Spark
-  * tail-recompute path.
+  * (the fixtures' batches take the keyed step on the driver) and again
+  * with `graft.force.distributed` set, which sends every batch down the
+  * Spark path (the same step in `flatMapGroups`).
   */
 class StreamingJobSpec extends AnyFunSuite {
   import TestSpark._
@@ -241,13 +241,15 @@ class StreamingJobSpec extends AnyFunSuite {
     damagedTailFails(_.dropRight(10))
   }
 
-  /** Batch `SmaCrossStrategy` over the first 220 ticks, each output's
-    * rows canonical: computed once for both gate sides. */
-  private lazy val first220 = {
-    val o = SmaCrossStrategy(ticksOf(sorted.take(220)), cfg)
+  /** Batch `SmaCrossStrategy` over `fed`, each output's rows canonical. */
+  private def batchOf(fed: Seq[Tick]): Seq[Seq[String]] = {
+    val o = SmaCrossStrategy(ticksOf(fed), cfg)
     Seq(o.normalized, o.signals, o.positions, o.executions, o.metrics).map(df =>
       canonRows(df.collect()))
   }
+
+  /** Batch over the first 220 ticks: computed once for both gate sides. */
+  private lazy val first220 = batchOf(sorted.take(220))
 
   /** Every sink's emissions: the row sinks as sets (a replayed batch
     * re-emits identical rows), metrics last-write-wins on metric_time. */
@@ -258,11 +260,13 @@ class StreamingJobSpec extends AnyFunSuite {
     val sinks = Sinks(add(0), add(1), add(2), add(3),
       df => df.collect().foreach(r => metrics(r.getAs[Any]("metric_time")) = r))
     /** Against batch `SmaCrossStrategy` over the first 220 ticks. */
-    def assertFirst220(): Unit = {
-      bufs.zip(first220).zip(Seq("normalized", "signals", "positions", "executions")).foreach {
+    def assertFirst220(): Unit = assertBatch(first220)
+    /** Against [[batchOf]]'s outputs. */
+    def assertBatch(want: Seq[Seq[String]]): Unit = {
+      bufs.zip(want).zip(Seq("normalized", "signals", "positions", "executions")).foreach {
         case ((got, want), name) => assert(got.toSeq.sorted == want.distinct, s"$name must match batch run")
       }
-      assert(canonRows(metrics.values) == first220(4), "upserted metrics must converge to batch metrics")
+      assert(canonRows(metrics.values) == want(4), "upserted metrics must converge to batch metrics")
     }
   }
 
@@ -401,6 +405,46 @@ class StreamingJobSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     assert(started.get == 0, s"${started.get} Spark jobs started in ${batches.size} batches")
     out.assertFirst220()
+  }
+
+  bothPaths("an instrument with no ticks in a batch still gives its open window to metrics") {
+    // 10 s ticks, 5-minute windows starting at offsets 100, 400, 700 s.
+    // Batch 2 holds A only and crosses 700 s, so it is the last batch to
+    // emit [400, 700): B's held rows of that window must be in it.
+    val (c1, rest) = sorted.partition(_.sequence < 60)
+    val (c2, c3) = rest.filter(t => t.product_id == "A" || t.sequence >= 80)
+      .partition(_.sequence < 80)
+    assert(c2.nonEmpty && c2.forall(_.product_id == "A"))
+    val out = new Emitted
+    val job = new StreamingJob(SmaCrossStrategy, cfg, out.sinks)
+    Seq(c1, c2, c3).zipWithIndex.foreach { case (c, i) => job.processBatch(ticksOf(c), i.toLong) }
+    out.assertBatch(batchOf(c1 ++ c2 ++ c3))
+  }
+
+  test("a sink that throws on the Spark path leaves nothing cached") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var failing = false
+    val job = new StreamingJob(SmaCrossStrategy, cfg, Sinks(positions = { df =>
+      df.collect()
+      if (failing) throw new IllegalStateException("positions sink down")
+    }))
+    val (c1, c2) = sorted.splitAt(130)
+    forced {
+      job.processBatch(ticksOf(c1), 0L)
+      failing = true
+      intercept[IllegalStateException](job.processBatch(ticksOf(c2), 1L))
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "a failed batch must not stay cached")
+  }
+
+  test("any strategy but sma_cross is refused at construction") {
+    val other = new graft.strategy.Strategy {
+      val name = "other"
+      def apply(raw: DataFrame, c: StrategyConfig) = SmaCrossStrategy(raw, c)
+    }
+    val e = intercept[IllegalArgumentException](new StreamingJob(other, cfg, Sinks()))
+    assert(e.getMessage.contains("sma_cross"))
   }
 
   test("tail size covers every rolling operator's lookback") {
