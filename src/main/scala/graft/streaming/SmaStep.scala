@@ -18,7 +18,8 @@ import org.apache.spark.sql.streaming.GroupState
   *
   * Three callers share it: the flatMapGroupsWithState twins
   * [[StatefulSignals]] and [[StatefulExecutions]] (through [[SmaStep.foldGroup]],
-  * state kept as [[SmaStep.State]]), and [[StreamingJob]]'s driver path.
+  * state kept as [[SmaStep.State]]), and [[StreamingJob]]'s keyed step,
+  * on both sides of its size gate.
   */
 final class SmaStep(cfg: StrategyConfig, from: Option[SmaStep.State] = None) {
   import SmaStep._

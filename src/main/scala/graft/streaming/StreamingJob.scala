@@ -3,7 +3,7 @@ package graft.streaming
 import graft.config.StrategyConfig
 import graft.ops.{Adaptive, Normalize, Performance, Positions}
 import graft.strategy.{SmaCrossStrategy, Strategy}
-import org.apache.spark.sql.{DataFrame, Encoders, LocalRebind, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, LocalPlan, LocalRebind, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -53,9 +53,12 @@ final case class Sinks(
   * check, the size probe and, under the gate, the whole fetch:
   *  - driver path (≤ [[StreamingJob.DriverBatchRows]] rows): the step runs
   *    on the driver, which holds the folded tail (an instrument without
-  *    new ticks is not refolded); the sinks read `LocalRelation`s and
-  *    metrics combine `Performance`'s exact per-row parts on the driver.
-  *    No Spark job, except the fetch when the batch is not already local.
+  *    new ticks is not refolded). The sink plans are compiled once per
+  *    session ([[org.apache.spark.sql.LocalPlan]]) and each sink gets a
+  *    bare `LocalRelation` of finished rows; metrics combine
+  *    `Performance`'s exact per-row parts on the driver. No Spark job,
+  *    except the fetch when the batch is not already local, and no
+  *    Catalyst work but the fetch and each sink's own action.
   *  - Spark path (larger batches, or `graft.force.distributed` /
   *    `SPARK_GRAFT_FORCE_DISTRIBUTED` through [[Adaptive.threshold]]): a
   *    scalar job finds the high-water mark, then the step runs in
@@ -248,7 +251,7 @@ object StreamingJob {
     .otherwise(col("price"))
 
   /** Folded rows: every column the per-row half of SmaCrossStrategy reads. */
-  private val FoldedSchema = StructType(TailSchema.fields.take(3) ++
+  private[streaming] val FoldedSchema = StructType(TailSchema.fields.take(3) ++
     Seq("mid_price", "best_bid", "best_ask", "returns", "volatility", "fast_sma", "slow_sma",
       "spread", "prev_spread", "position", "prev_position").map(StructField(_, DoubleType)))
 
@@ -353,15 +356,20 @@ object StreamingJob {
 
   /** The sink frames of both sides, built and analysed once per session
     * over template leaves — the emitted folded rows, the metrics windows'
-    * rows and their per-window parts — and re-pointed at each batch's
-    * rows or frames (building them afresh per batch added ~350 ms of
-    * live_feed tick latency on a 4-core host). The four row sinks are
-    * SmaCrossStrategy's per-row columns (Positions' per-row halves around
-    * the folded `position`/`prev_position`). Metrics are `Performance`
-    * over the windows' rows; on the driver, its driver form: the per-row
-    * parts, a Project over their `LocalRelation`, combined per window on
-    * the driver and finished by `Performance`'s own expressions. */
-  private final class SinkPlans(val spark: SparkSession, cfg: StrategyConfig) {
+    * rows and their per-window parts (building them afresh per batch
+    * added ~350 ms of live_feed tick latency on a 4-core host). The four
+    * row sinks are SmaCrossStrategy's per-row columns (Positions' per-row
+    * halves around the folded `position`/`prev_position`). Metrics are
+    * `Performance` over the windows' rows; on the driver, its driver
+    * form: the per-row parts, combined per window on the driver and
+    * finished by `Performance`'s own expressions.
+    *
+    * The Spark path re-points the analysed plans at its persisted frames.
+    * The driver path's plans — the row sinks, the parts and the finish —
+    * are compiled here, once ([[LocalPlan]]; a plan that cannot be
+    * compiled fails the construction), so a batch runs no Catalyst work
+    * of its own: each sink gets a bare `LocalRelation` of finished rows. */
+  private[streaming] final class SinkPlans(val spark: SparkSession, cfg: StrategyConfig) {
     private def costsOf(folded: DataFrame): DataFrame =
       Positions.costRows(Positions.streamRows(folded, col("position")), cfg, col("prev_position"))
     private val emitted = LocalRebind.template(spark, FoldedSchema)
@@ -374,12 +382,14 @@ object StreamingJob {
     private val rowSinks = Seq(out.normalized, out.signals, out.positions, out.executions)
     private val sparkMetrics = Performance(costsOf(windows), cfg)
 
-    /** Driver path: no step is a Spark job. */
-    def local(emittedRows: Seq[Row], windowRows: Seq[Row]): Seq[DataFrame] = {
-      val Seq(rowParts) = LocalRebind(Seq(parts), Seq(windows -> windowRows))
-      LocalRebind(rowSinks :+ out.metrics, Seq(emitted -> emittedRows,
-        perWindow -> Performance.combineWindows(rowParts.collect().toSeq)))
-    }
+    val localRows = rowSinks.map(new LocalPlan(_, emitted))
+    val localParts = new LocalPlan(parts, windows)
+    val localFinish = new LocalPlan(out.metrics, perWindow)
+
+    /** Driver path: no Catalyst work but each frame's bare leaf. */
+    def local(emittedRows: Seq[Row], windowRows: Seq[Row]): Seq[DataFrame] =
+      localRows.map(_(emittedRows)) :+
+        localFinish(Performance.combineWindows(localParts.rows(windowRows)))
 
     /** Spark path: the same row sinks over distributed frames. */
     def distributed(emittedRows: DataFrame, windowRows: DataFrame): Seq[DataFrame] =

@@ -5,7 +5,8 @@ import graft.config.StrategyConfig
 import graft.strategy.SmaCrossStrategy
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, classic}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -405,6 +406,16 @@ class StreamingJobSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     assert(started.get == 0, s"${started.get} Spark jobs started in ${batches.size} batches")
     out.assertFirst220()
+  }
+
+  test("every frame a driver-path sink receives is a bare LocalRelation") {
+    val plans = mutable.ArrayBuffer[LogicalPlan]()
+    val see = (df: DataFrame) => { plans += df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed; () }
+    val job = new StreamingJob(SmaCrossStrategy, cfg, Sinks(see, see, see, see, see))
+    sorted.take(220).grouped(55).zipWithIndex.foreach { case (b, i) =>
+      job.processBatch(ticksOf(b), i.toLong) }
+    assert(plans.size == 20)
+    plans.foreach(p => assert(p.isInstanceOf[LocalRelation], s"a sink frame is not a bare leaf:\n$p"))
   }
 
   bothPaths("an instrument with no ticks in a batch still gives its open window to metrics") {
