@@ -18,8 +18,9 @@ import org.apache.spark.sql.streaming.GroupState
   *
   * Three callers share it: the flatMapGroupsWithState twins
   * [[StatefulSignals]] and [[StatefulExecutions]] (through [[SmaStep.foldGroup]],
-  * state kept as [[SmaStep.State]]), and [[StreamingJob]]'s keyed step,
-  * on both sides of its size gate.
+  * which orders and drops rows by [[KeyedFold]]; state kept as
+  * [[SmaStep.State]]), and [[StreamingJob]]'s keyed step, on both sides of
+  * its size gate.
   */
 final class SmaStep(cfg: StrategyConfig, from: Option[SmaStep.State] = None) {
   import SmaStep._
@@ -117,28 +118,22 @@ object SmaStep {
   /** GroupState of the twins: the step plus the key's high-water mark. */
   final case class KeyState(lastEventUs: Long, lastSeq: Long, sma: State)
 
-  /** The twins' keyed shell: fold one key's micro-batch rows in exact
-    * (event micros, sequence) order — rows at or behind the key's
-    * high-water mark are dropped (watermark semantics) — emit through
+  /** The twins' keyed shell: fold one key's micro-batch rows through
+    * [[KeyedFold]] (exact (event micros, sequence) order, rows at or
+    * behind the key's high-water mark dropped), emit through
     * `emit(row, eventMicros, folded)` and store the state. */
   def foldGroup[T, O](cfg: StrategyConfig, rows: Iterator[T], state: GroupState[KeyState])(
       time: T => java.sql.Timestamp, seq: T => Long, mid: T => Double)(
       emit: (T, Long, Out) => Option[O]): Iterator[O] = {
     val prior = state.getOption
     val step = new SmaStep(cfg, prior.map(_.sma))
-    var lastUs = prior.fold(Long.MinValue)(_.lastEventUs)
-    var lastSeq = prior.fold(Long.MinValue)(_.lastSeq)
     val out = Vector.newBuilder[O]
-    // micro-batches are unordered; getTime truncates sub-ms, so sort on micros
-    rows.map(t => (EventTime.micros(time(t)), t)).toVector
-      .sortBy { case (us, t) => (us, seq(t)) }
-      .foreach { case (us, t) =>
-        if (us > lastUs || (us == lastUs && seq(t) > lastSeq)) {
-          out ++= emit(t, us, step(mid(t)))
-          lastUs = us; lastSeq = seq(t)
-        }
-      }
-    state.update(KeyState(lastUs, lastSeq, step.state))
+    // the fold carries only the mark; the step's rings are snapshotted once
+    KeyedFold(rows, prior, KeyState(Long.MinValue, Long.MinValue, null))(
+        time, seq, k => (k.lastEventUs, k.lastSeq)) { (_, t, us) =>
+      out ++= emit(t, us, step(mid(t)))
+      KeyState(us, seq(t), null)
+    }.foreach(k => state.update(k.copy(sma = step.state)))
     out.result().iterator
   }
 }

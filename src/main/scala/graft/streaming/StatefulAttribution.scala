@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The batch query computes a running IGNORE-NULLS last over
   * (ts, event_id) order; the incremental fold replays the identical
-  * order (rows sorted within each micro-batch, rows older than the
-  * key's high-water mark dropped — same discipline as StatefulFunnel),
+  * order (rows fold through [[KeyedFold]]: ordered within each
+  * micro-batch, rows at or behind the key's high-water mark dropped),
   * so each purchase sees exactly the batch-final "most recent touch so
   * far". All state and arithmetic is exact integer micros — no floats,
   * nothing to drift. StatefulAttributionSpec proves streaming ≡ batch.
@@ -37,28 +37,21 @@ object StatefulAttribution {
       .flatMapGroupsWithState[TouchState, AttributionOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, rows: Iterator[EventIn], state: GroupState[TouchState]) =>
-          var st = state.getOption.getOrElse(
-            TouchState(Long.MinValue, Long.MinValue, Unset, null, Unset))
           val out = Vector.newBuilder[AttributionOut]
-          val sorted = rows.toVector
-            .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-          for (e <- sorted) {
-            val us = EventTime.micros(e.ts)
-            if (us > st.lastUs || (us == st.lastUs && e.event_id > st.lastSeq)) {
-              e.event_type match {
-                case "click" | "view" =>
-                  st = TouchState(us, e.event_id, e.event_id, e.event_type, us)
-                case "purchase" =>
-                  if (st.touchId != Unset && us - st.touchUs <= horizonUs)
-                    out += AttributionOut(key, e.event_id, us, st.touchId,
-                      st.touchType, us - st.touchUs)
-                  st = st.copy(lastUs = us, lastSeq = e.event_id)
-                case _ =>
-                  st = st.copy(lastUs = us, lastSeq = e.event_id)
-              }
+          KeyedFold(rows, state.getOption, TouchState(Long.MinValue, Long.MinValue, Unset, null, Unset))(
+              _.ts, _.event_id, st => (st.lastUs, st.lastSeq)) { (st, e, us) =>
+            e.event_type match {
+              case "click" | "view" =>
+                TouchState(us, e.event_id, e.event_id, e.event_type, us)
+              case "purchase" =>
+                if (st.touchId != Unset && us - st.touchUs <= horizonUs)
+                  out += AttributionOut(key, e.event_id, us, st.touchId,
+                    st.touchType, us - st.touchUs)
+                st.copy(lastUs = us, lastSeq = e.event_id)
+              case _ =>
+                st.copy(lastUs = us, lastSeq = e.event_id)
             }
-          }
-          state.update(st)
+          }.foreach(state.update)
           out.result().iterator
       }
   }

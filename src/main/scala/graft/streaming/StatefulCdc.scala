@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state performs incrementally; the resurrection counter needs only
   * the previous change's tombstone flag, which is part of the state.
   * Replays are dropped by the (ts, event_id) high-water mark (in-order
-  * feed, the shared twin convention).
+  * feed, [[KeyedFold]]).
   *
   * State is O(1) per key — the current row plus four counters: the
   * 100 TB shape (state partitions like the batch Exchange; emission
@@ -52,32 +52,18 @@ object StatefulCdc {
       .flatMapGroupsWithState[CdcState, RowOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, rows: Iterator[ChangeIn], state: GroupState[CdcState]) =>
-          var st = state.getOption.orNull
-          var changed = false
-          val sorted = rows.toVector
-            .sortBy(c => (EventTime.micros(c.ts), c.event_id))
-          for (c <- sorted) {
-            val us = EventTime.micros(c.ts)
-            val fresh = st == null || us > st.lastUs ||
-              (us == st.lastUs && c.event_id > st.lastId)
-            if (fresh) {
-              val del = c.event_type == "error"
-              val wasDel = st != null && st.del
-              st = CdcState(del,
-                c.value, c.props, us, c.event_id,
-                (if (st == null) 0L else st.n) + 1L,
-                (if (st == null) 0L else st.nDel) + (if (del) 1L else 0L),
-                (if (st == null) 0L else st.nRes) +
-                  (if (wasDel && !del) 1L else 0L))
-              changed = true
-            } // else: stale/replayed change below the high-water mark
-          }
-          if (!changed) Iterator.empty
-          else {
+          val zero = CdcState(del = false, 0.0, null, Long.MinValue, Long.MinValue, 0L, 0L, 0L)
+          KeyedFold(rows, state.getOption, zero)(
+              _.ts, _.event_id, st => (st.lastUs, st.lastId)) { (st, c, us) =>
+            val del = c.event_type == "error"
+            CdcState(del, c.value, c.props, us, c.event_id, st.n + 1L,
+              st.nDel + (if (del) 1L else 0L),
+              st.nRes + (if (st.del && !del) 1L else 0L))
+          }.map { st =>
             state.update(st)
-            Iterator.single(RowOut(key, !st.del, st.value, st.props,
-              EventTime.toTimestamp(st.lastUs), st.n, st.nDel, st.nRes))
-          }
+            RowOut(key, !st.del, st.value, st.props,
+              EventTime.toTimestamp(st.lastUs), st.n, st.nDel, st.nRes)
+          }.iterator
       }
   }
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Because every folded quantity is an exact grid long and integer
   * arithmetic is associative, the micro-batch grouping cannot change any
   * bit: the final upserted rows equal the batch window formulation
-  * exactly (StatefulCusumSpec). Rows are sorted within each micro-batch
-  * per key by exact event-time micros; rows older than the key's
-  * high-water mark are dropped (watermark-style, like StatefulSignals).
+  * exactly (StatefulCusumSpec). Each key's rows fold through
+  * [[KeyedFold]]: exact (event micros, sequence) order, rows at or
+  * behind the key's high-water mark dropped.
   */
 object StatefulCusum {
 
@@ -38,32 +38,23 @@ object StatefulCusum {
       .flatMapGroupsWithState[CusumState, CusumOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(
-            CusumState(refSet = false, 0L, Long.MinValue, Long.MinValue,
-              0L, 0L, 0L, 0L, 0L, 0L))
-          val before = st
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            // drop rows at/behind the high-water mark only if strictly stale
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq) || !st.refSet) {
-              // same pure-IEEE grid mapping as Det.kl
-              val k = math.floor(t.price * pow + 0.5).toLong
-              val ref = if (st.refSet) st.ref else k
-              val p = st.p + (k - ref - driftK)
-              val minP = math.min(st.minP, p)
-              val s = p - math.min(minP, 0L)
-              st = CusumState(refSet = true, ref, us, t.sequence,
-                p, minP, math.max(st.maxS, s), s,
-                st.n + 1L, st.nAlarms + (if (s > threshK) 1L else 0L))
-            }
-          }
-          state.update(st)
-          if (st != before)
-            Iterator.single(CusumOut(key, st.n, st.nAlarms,
-              st.maxS.toDouble / pow, st.finalS.toDouble / pow))
-          else Iterator.empty
+          val zero = CusumState(refSet = false, 0L, Long.MinValue, Long.MinValue,
+            0L, 0L, 0L, 0L, 0L, 0L)
+          KeyedFold(rows, state.getOption, zero)(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+            // same pure-IEEE grid mapping as Det.kl
+            val k = math.floor(t.price * pow + 0.5).toLong
+            val ref = if (st.refSet) st.ref else k
+            val p = st.p + (k - ref - driftK)
+            val minP = math.min(st.minP, p)
+            val s = p - math.min(minP, 0L)
+            CusumState(refSet = true, ref, us, t.sequence,
+              p, minP, math.max(st.maxS, s), s,
+              st.n + 1L, st.nAlarms + (if (s > threshK) 1L else 0L))
+          }.map { st =>
+            state.update(st)
+            CusumOut(key, st.n, st.nAlarms, st.maxS.toDouble / pow, st.finalS.toDouble / pow)
+          }.iterator
       }
   }
 

@@ -23,10 +23,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     query's trailing bar bit-for-bit (StatefulDollarBarsSpec proves
   *     equality across micro-batch splits).
   *
-  * Ordering contract: same as [[StatefulVpin]] — rows sort
-  * (event_time, sequence) within a micro-batch; a cross-batch
-  * straggler is dropped by the monotone guard; streaming≡batch holds
-  * for feeds ordered at micro-batch granularity.
+  * Ordering contract: [[KeyedFold]]'s — rows fold in (event_time,
+  * sequence) order and a cross-batch straggler is dropped at the
+  * (ts, seq) guard; streaming≡batch holds for feeds ordered at
+  * micro-batch granularity.
   */
 object StatefulDollarBars {
 
@@ -52,36 +52,32 @@ object StatefulDollarBars {
       .flatMapGroupsWithState[BarState, Bar](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[BarState]) =>
-          var st = state.getOption.getOrElse(BarState(
-            Long.MinValue, Long.MinValue, 0L, -1L,
-            Double.NaN, Double.NaN, Double.NaN, Double.NaN, 0L, 0L))
+          val prior = state.getOption
+          val zero = BarState(Long.MinValue, Long.MinValue, 0L, -1L,
+            Double.NaN, Double.NaN, Double.NaN, Double.NaN, 0L, 0L)
           val out = Vector.newBuilder[Bar]
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq)) {
-              val c = centsOf(t.price)
-              val cum = st.cum + c
-              val bar = (cum - 1L) / targetCents
-              if (bar != st.bar && st.n > 0L)
-                out += Bar(key, st.bar, st.open, st.high, st.low, st.close,
-                  st.n, st.cents, closed = true)
-              st =
-                if (bar != st.bar)
-                  BarState(us, t.sequence, cum, bar, t.price, t.price,
-                    t.price, t.price, 1L, c)
-                else
-                  st.copy(lastUs = us, lastSeq = t.sequence, cum = cum,
-                    high = math.max(st.high, t.price),
-                    low = math.min(st.low, t.price),
-                    close = t.price, n = st.n + 1L, cents = st.cents + c)
-            }
+          val folded = KeyedFold(rows, prior, zero)(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+            val c = centsOf(t.price)
+            val cum = st.cum + c
+            val bar = (cum - 1L) / targetCents
+            if (bar != st.bar && st.n > 0L)
+              out += Bar(key, st.bar, st.open, st.high, st.low, st.close,
+                st.n, st.cents, closed = true)
+            if (bar != st.bar)
+              BarState(us, t.sequence, cum, bar, t.price, t.price,
+                t.price, t.price, 1L, c)
+            else
+              st.copy(lastUs = us, lastSeq = t.sequence, cum = cum,
+                high = math.max(st.high, t.price),
+                low = math.min(st.low, t.price),
+                close = t.price, n = st.n + 1L, cents = st.cents + c)
           }
-          if (st.n > 0L)
+          folded.foreach(state.update)
+          // the open bar is re-emitted even when no row was new
+          for (st <- folded.orElse(prior) if st.n > 0L)
             out += Bar(key, st.bar, st.open, st.high, st.low, st.close,
               st.n, st.cents, closed = false)
-          state.update(st)
           out.result().iterator
       }
   }

@@ -42,30 +42,22 @@ object StatefulDrawdown {
 
     override def handleInputRows(key: String, rows: Iterator[TickIn],
                                  timerValues: TimerValues): Iterator[DrawOut] = {
-      var st = Option(state.get())
-        .getOrElse(DrawState(Long.MinValue, Long.MinValue, Long.MinValue, 0L, 0.0, 0L))
-      val before = st
-      val sorted = rows.toVector
-        .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-      for (t <- sorted) {
-        val us = EventTime.micros(t.event_time)
-        if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq) || st.n == 0L) {
-          // same pure-IEEE grid mapping as Det.kl
-          val k = math.floor(t.price * Pow + 0.5).toLong
-          val runmax = math.max(st.runmaxK, k)
-          val dd = runmax - k
-          // identical operand bits to the batch per-row ratio; max over
-          // doubles is order-independent, so micro-batching can't drift
-          val frac = dd.toDouble / runmax.toDouble
-          st = DrawState(us, t.sequence, runmax,
-            math.max(st.maxDdK, dd), math.max(st.maxFrac, frac), st.n + 1L)
-        }
-      }
-      state.update(st)
-      if (st != before)
-        Iterator.single(DrawOut(key, st.n, st.runmaxK.toDouble / Pow,
-          st.maxDdK.toDouble / Pow, st.maxFrac))
-      else Iterator.empty
+      KeyedFold(rows, Option(state.get()),
+          DrawState(Long.MinValue, Long.MinValue, Long.MinValue, 0L, 0.0, 0L))(
+          _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+        // same pure-IEEE grid mapping as Det.kl
+        val k = math.floor(t.price * Pow + 0.5).toLong
+        val runmax = math.max(st.runmaxK, k)
+        val dd = runmax - k
+        // identical operand bits to the batch per-row ratio; max over
+        // doubles is order-independent, so micro-batching can't drift
+        val frac = dd.toDouble / runmax.toDouble
+        DrawState(us, t.sequence, runmax,
+          math.max(st.maxDdK, dd), math.max(st.maxFrac, frac), st.n + 1L)
+      }.map { st =>
+        state.update(st)
+        DrawOut(key, st.n, st.runmaxK.toDouble / Pow, st.maxDdK.toDouble / Pow, st.maxFrac)
+      }.iterator
     }
   }
 

@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is O(open lots) per key — the open inventory, not the history;
   * realized P&L stays an exact Long on the cent grid so replay of the
   * emission (not the input) is side-effect free. Ordering contract:
-  * same as [[StatefulVpin]]/[[StatefulImbalance]] — rows sort
-  * (ts, event_id) within a micro-batch and a cross-batch straggler is
-  * dropped by the monotone guard; streaming≡batch holds for feeds
-  * ordered at micro-batch granularity. Sequential queue state is NOT
+  * [[KeyedFold]]'s — rows fold in (ts, event_id) order and a
+  * cross-batch straggler is dropped at the high-water mark;
+  * streaming≡batch holds for feeds ordered at micro-batch
+  * granularity. Sequential queue state is NOT
   * replay-idempotent: exactly-once delivery required, like the counting
   * sketches.
   */
@@ -39,30 +39,21 @@ object StatefulFifo {
       .flatMapGroupsWithState[FifoState, FifoOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, rows: Iterator[FifoIn], state: GroupState[FifoState]) =>
-          var st = state.getOption.getOrElse(
-            FifoState(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, Vector.empty))
-          val q = scala.collection.mutable.Queue.empty[Long]
-          q ++= st.lots
-          var realized = st.realized
-          var nb = st.nb; var ns = st.ns; var nk = st.nk
-          var lastUs = st.lastUs; var lastSeq = st.lastSeq
-          val sorted = rows.toVector
-            .sortBy(r => (EventTime.micros(r.ts), r.event_id))
-          var touched = false
-          for (r <- sorted) {
-            val us = EventTime.micros(r.ts)
-            if (us > lastUs || (us == lastUs && r.event_id > lastSeq)) {
-              if (r.kind == 1) { q.enqueue(r.px); nb += 1L }
-              else if (q.nonEmpty) { realized += r.px - q.dequeue(); ns += 1L }
-              else nk += 1L
-              lastUs = us; lastSeq = r.event_id; touched = true
-            }
-          }
-          if (!touched) Iterator.empty
-          else {
-            state.update(FifoState(lastUs, lastSeq, realized, nb, ns, nk, q.toVector))
-            Iterator.single(FifoOut(key, nb, ns, nk, realized, q.size.toLong, q.sum))
-          }
+          // lots as a Vector: O(1) enqueue at the tail and dequeue at the head
+          val prior = state.getOption.map(st => st.copy(lots = st.lots.toVector))
+          KeyedFold(rows, prior,
+              FifoState(Long.MinValue, Long.MinValue, 0L, 0L, 0L, 0L, Vector.empty))(
+              _.ts, _.event_id, st => (st.lastUs, st.lastSeq)) { (st, r, us) =>
+            val marked = st.copy(lastUs = us, lastSeq = r.event_id)
+            if (r.kind == 1) marked.copy(nb = st.nb + 1L, lots = st.lots :+ r.px)
+            else if (st.lots.nonEmpty)
+              marked.copy(realized = st.realized + (r.px - st.lots.head), ns = st.ns + 1L,
+                lots = st.lots.tail)
+            else marked.copy(nk = st.nk + 1L)
+          }.map { st =>
+            state.update(st)
+            FifoOut(key, st.nb, st.ns, st.nk, st.realized, st.lots.size.toLong, st.lots.sum)
+          }.iterator
       }
   }
 }

@@ -32,27 +32,19 @@ object StatefulHolt {
       .flatMapGroupsWithState[HoltState, HoltOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[HoltState]) =>
-          var st = state.getOption.getOrElse(
-            HoltState(Long.MinValue, Long.MinValue, 0.0, 0.0, 0L))
-          val before = st
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq) || st.n == 0L) {
-              if (st.n == 0L) st = HoltState(us, t.sequence, t.price, 0.0, 1L)
-              else {
-                // identical operand order to Indicators.holtPerKey
-                val nl = t.price * a + (st.lv + st.tr) * na
-                val ntr = (nl - st.lv) * b + st.tr * nb
-                st = HoltState(us, t.sequence, nl, ntr, st.n + 1L)
-              }
+          KeyedFold(rows, state.getOption, HoltState(Long.MinValue, Long.MinValue, 0.0, 0.0, 0L))(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+            if (st.n == 0L) HoltState(us, t.sequence, t.price, 0.0, 1L)
+            else {
+              // identical operand order to Indicators.holtPerKey
+              val nl = t.price * a + (st.lv + st.tr) * na
+              val ntr = (nl - st.lv) * b + st.tr * nb
+              HoltState(us, t.sequence, nl, ntr, st.n + 1L)
             }
-          }
-          state.update(st)
-          if (st != before)
-            Iterator.single(HoltOut(key, st.n, st.lv, st.tr, st.lv + h * st.tr))
-          else Iterator.empty
+          }.map { st =>
+            state.update(st)
+            HoltOut(key, st.n, st.lv, st.tr, st.lv + h * st.tr)
+          }.iterator
       }
   }
 }

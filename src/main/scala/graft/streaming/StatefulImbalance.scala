@@ -39,24 +39,17 @@ object StatefulImbalance {
       .flatMapGroupsWithState[SignState, Classified](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[SignState]) =>
-          var st = state.getOption.getOrElse(
-            SignState(Long.MinValue, Long.MinValue, Double.NaN, 0))
           val out = Vector.newBuilder[Classified]
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq)) {
-              val d =
-                if (st.lastPrice.isNaN) 0
-                else if (t.price > st.lastPrice) 1
-                else if (t.price < st.lastPrice) -1
-                else st.dir
-              st = SignState(us, t.sequence, t.price, d)
-              if (d != 0) out += Classified(key, t.event_time, d)
-            }
-          }
-          state.update(st)
+          KeyedFold(rows, state.getOption, SignState(Long.MinValue, Long.MinValue, Double.NaN, 0))(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+            val d =
+              if (st.lastPrice.isNaN) 0
+              else if (t.price > st.lastPrice) 1
+              else if (t.price < st.lastPrice) -1
+              else st.dir
+            if (d != 0) out += Classified(key, t.event_time, d)
+            SignState(us, t.sequence, t.price, d)
+          }.foreach(state.update)
           out.result().iterator
       }
   }

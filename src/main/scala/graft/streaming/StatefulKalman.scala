@@ -30,29 +30,21 @@ object StatefulKalman {
       .flatMapGroupsWithState[KState, KOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[KState]) =>
-          var st = state.getOption.getOrElse(
-            KState(Long.MinValue, Long.MinValue, 0.0, 0.0, 0.0, 0L))
-          val before = st
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq) || st.n == 0L) {
-              if (st.n == 0L) st = KState(us, t.sequence, t.price, p0, 0.0, 1L)
-              else {
-                // identical operand order to Indicators.kalmanPerKey
-                val p1 = st.p + q
-                val k = p1 / (p1 + r)
-                val x = st.x + k * (t.price - st.x)
-                val p = (1.0 - k) * p1
-                st = KState(us, t.sequence, x, p, k, st.n + 1L)
-              }
+          KeyedFold(rows, state.getOption, KState(Long.MinValue, Long.MinValue, 0.0, 0.0, 0.0, 0L))(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, t, us) =>
+            if (st.n == 0L) KState(us, t.sequence, t.price, p0, 0.0, 1L)
+            else {
+              // identical operand order to Indicators.kalmanPerKey
+              val p1 = st.p + q
+              val k = p1 / (p1 + r)
+              val x = st.x + k * (t.price - st.x)
+              val p = (1.0 - k) * p1
+              KState(us, t.sequence, x, p, k, st.n + 1L)
             }
-          }
-          state.update(st)
-          if (st != before)
-            Iterator.single(KOut(key, st.n, st.x, st.k, st.p))
-          else Iterator.empty
+          }.map { st =>
+            state.update(st)
+            KOut(key, st.n, st.x, st.k, st.p)
+          }.iterator
       }
   }
 }

@@ -44,7 +44,8 @@ object StatefulLatency {
     * buffer (O(late window) state) that splices cross-batch stragglers
     * back into the chain — or widen micro-batches (trigger interval)
     * past their reorder horizon. StatefulLatencySpec pins the drop
-    * behavior so a silent semantic change fails a test.
+    * behavior so a silent semantic change fails a test. The sort and
+    * the drop are [[KeyedFold]]'s.
     */
   def gaps(events: Dataset[EventIn]): Dataset[Gap] = {
     val spark = events.sparkSession
@@ -54,18 +55,12 @@ object StatefulLatency {
       .flatMapGroupsWithState[GapState, Gap](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[EventIn], state: GroupState[GapState]) =>
-          var st = state.getOption.getOrElse(GapState(Long.MinValue, Long.MinValue))
           val out = Vector.newBuilder[Gap]
-          val sorted = rows.toVector
-            .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-          for (e <- sorted) {
-            val us = EventTime.micros(e.ts)
-            if (us > st.lastUs || (us == st.lastUs && e.event_id > st.lastId)) {
-              if (st.lastUs != Long.MinValue) out += Gap(key, e.ts, us - st.lastUs)
-              st = GapState(us, e.event_id)
-            }
-          }
-          state.update(st)
+          KeyedFold(rows, state.getOption, GapState(Long.MinValue, Long.MinValue))(
+              _.ts, _.event_id, st => (st.lastUs, st.lastId)) { (st, e, us) =>
+            if (st.lastUs != Long.MinValue) out += Gap(key, e.ts, us - st.lastUs)
+            GapState(us, e.event_id)
+          }.foreach(state.update)
           out.result().iterator
       }
   }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exactly once; no watermark/timeout is needed (emission is
   * data-driven, like [[StatefulGapFill]]'s grid). Rows at or below the
   * key's (event_time, sequence) high-water mark are dropped
-  * (watermark-style replay guard, same convention as the other twins).
+  * ([[KeyedFold]], the convention of the in-order twins).
   *
   * State is O(1) per key — six numbers and the high-water mark, the
   * 100 TB shape: keyed state partitions across executors exactly like
@@ -53,31 +53,23 @@ object StatefulOhlc {
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[BarState]) =>
           val out = Seq.newBuilder[BarOut]
-          var st = state.getOption.orNull
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (tk <- sorted) {
-            val us = EventTime.micros(tk.event_time)
+          val zero = BarState(Long.MinValue, Double.NaN, Double.NaN, Double.NaN,
+            Double.NaN, Long.MinValue, Long.MinValue, 0L)
+          KeyedFold(rows, state.getOption, zero)(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, tk, us) =>
             val bar = Math.floorDiv(us, barUs) * barUs
-            if (st == null) {
-              st = BarState(bar, tk.price, tk.price, tk.price, tk.price,
-                us, tk.sequence, 1L)
-            } else if (us > st.lastUs ||
-                       (us == st.lastUs && tk.sequence > st.lastSeq)) {
-              if (bar > st.barStartUs) {
-                // first tick of a later bar: the open bar is final — emit
+            if (st.n == 0L || bar > st.barStartUs) {
+              // first tick of a later bar: the open bar is final — emit
+              if (st.n > 0L)
                 out += BarOut(key, EventTime.toTimestamp(st.barStartUs),
                   st.open, st.high, st.low, st.close, st.n)
-                st = BarState(bar, tk.price, tk.price, tk.price, tk.price,
-                  us, tk.sequence, 1L)
-              } else {
-                st = BarState(st.barStartUs, st.open,
-                  math.max(st.high, tk.price), math.min(st.low, tk.price),
-                  tk.price, us, tk.sequence, st.n + 1L)
-              }
-            } // else: stale/duplicate below the high-water mark — drop
-          }
-          if (st != null) state.update(st)
+              BarState(bar, tk.price, tk.price, tk.price, tk.price,
+                us, tk.sequence, 1L)
+            } else
+              BarState(st.barStartUs, st.open,
+                math.max(st.high, tk.price), math.min(st.low, tk.price),
+                tk.price, us, tk.sequence, st.n + 1L)
+          }.foreach(state.update)
           out.result().iterator
       }
   }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arrival order cannot matter). The [[StatefulSeasonal]] emission
   * contract: a changelog stream whose last row per key is the current
   * truth. Replays are dropped by the (event_time, sequence) high-water
-  * mark (in-order feed, the shared twin convention).
+  * mark (in-order feed, [[KeyedFold]]).
   *
   * State is the per-key histogram — O(distinct values), NOT O(rows):
   * prices on a cent grid or bucketed latencies keep it small and
@@ -61,31 +61,16 @@ object StatefulQuantile {
       .flatMapGroupsWithState[QState, QOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[ObsIn], state: GroupState[QState]) =>
-          var st = state.getOption.getOrElse(QState(Map.empty, Long.MinValue,
-            Long.MinValue))
-          var hist = st.hist
-          var lastUs = st.lastUs
-          var lastSeq = st.lastSeq
-          var accepted = 0L
-          val sorted = rows.toVector
-            .sortBy(o => (EventTime.micros(o.event_time), o.sequence))
-          for (o <- sorted) {
-            val us = EventTime.micros(o.event_time)
-            if (us > lastUs || (us == lastUs && o.sequence > lastSeq)) {
-              hist = hist.updated(o.price, hist.getOrElse(o.price, 0L) + 1L)
-              lastUs = us; lastSeq = o.sequence
-              accepted += 1L
-            } // else: stale/replayed row below the high-water mark — drop
-          }
-          if (accepted == 0L) Iterator.empty
-          else {
-            state.update(QState(hist, lastUs, lastSeq))
+          KeyedFold(rows, state.getOption, QState(Map.empty, Long.MinValue, Long.MinValue))(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (st, o, us) =>
+            QState(st.hist.updated(o.price, st.hist.getOrElse(o.price, 0L) + 1L), us, o.sequence)
+          }.map { st =>
+            state.update(st)
+            val hist = st.hist
             val n = hist.valuesIterator.sum
             val keys = hist.keys.toIndexedSeq.sorted
-            Iterator.single(QOut(key, n,
-              pick(keys, hist, n, 50), pick(keys, hist, n, 95),
-              pick(keys, hist, n, 99)))
-          }
+            QOut(key, n, pick(keys, hist, n, 50), pick(keys, hist, n, 95), pick(keys, hist, n, 99))
+          }.iterator
       }
   }
 }

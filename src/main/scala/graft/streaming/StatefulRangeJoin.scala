@@ -22,8 +22,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sequence, so the doubles are bit-equal by construction). Triggers
   * are themselves window events for LATER triggers (the batch build
   * side is ALL events), so every arrival enters the buffer. Replays
-  * drop at the (ts, event_id) high-water mark (in-order feed, the
-  * shared twin convention).
+  * drop at the (ts, event_id) high-water mark (in-order feed,
+  * [[KeyedFold]]).
   *
   * State per key = the events of the trailing window only — pruned at
   * every arrival to `ts − 60 s`, valid because future triggers have
@@ -53,40 +53,29 @@ object StatefulRangeJoin {
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: Long, rows: Iterator[EventIn], state: GroupState[BufState]) =>
           val out = Seq.newBuilder[EnrichedOut]
-          var st = state.getOption.getOrElse(
-            BufState(Nil, Long.MinValue, Long.MinValue))
-          var win = st.win
-          var lastUs = st.lastUs
-          var lastId = st.lastId
-          val sorted = rows.toVector
-            .sortBy(e => (EventTime.micros(e.ts), e.event_id))
-          for (e <- sorted) {
-            val us = EventTime.micros(e.ts)
-            if (us > lastUs || (us == lastUs && e.event_id > lastId)) {
-              win = win.filter(_._1 >= us - WindowUs) // lower bound INCLUSIVE
-              if (e.event_type == "error") {
-                // strictly-earlier window events (same-instant excluded)
-                val hits = win.filter(_._1 < us)
-                var k = 0L
-                hits.foreach(k += _._3)
-                // Det.sumD finish + the batch contract's r6 wrap (r14
-                // ADVICE): the contract query snaps range_join at 6 dp,
-                // so the twin replays the SAME scalar sequence
-                // floor(x·10⁶+0.5)/10⁶ — bit-equal at ANY magnitude,
-                // not just inside the |Σk·100| < 2^51 envelope where
-                // snap6 is an identity on the 1e-4 grid.
-                val sd = k.toDouble / 1e4
-                out += EnrichedOut(key, e.event_id, e.ts,
-                  hits.size.toLong, math.floor(sd * 1e6 + 0.5) / 1e6)
-              }
-              // every event (triggers included) feeds later windows;
-              // the same kl grid batch Det.sumD(_, 4) accumulates
-              win = (us, e.event_id,
-                math.floor(e.value * 10000.0 + 0.5).toLong) :: win
-              lastUs = us; lastId = e.event_id
-            } // else: stale/replayed row below the high-water mark — drop
-          }
-          state.update(BufState(win, lastUs, lastId))
+          KeyedFold(rows, state.getOption, BufState(Nil, Long.MinValue, Long.MinValue))(
+              _.ts, _.event_id, st => (st.lastUs, st.lastId)) { (st, e, us) =>
+            val win = st.win.filter(_._1 >= us - WindowUs) // lower bound INCLUSIVE
+            if (e.event_type == "error") {
+              // strictly-earlier window events (same-instant excluded)
+              val hits = win.filter(_._1 < us)
+              var k = 0L
+              hits.foreach(k += _._3)
+              // Det.sumD finish + the batch contract's r6 wrap (r14
+              // ADVICE): the contract query snaps range_join at 6 dp,
+              // so the twin replays the SAME scalar sequence
+              // floor(x·10⁶+0.5)/10⁶ — bit-equal at ANY magnitude,
+              // not just inside the |Σk·100| < 2^51 envelope where
+              // snap6 is an identity on the 1e-4 grid.
+              val sd = k.toDouble / 1e4
+              out += EnrichedOut(key, e.event_id, e.ts,
+                hits.size.toLong, math.floor(sd * 1e6 + 0.5) / 1e6)
+            }
+            // every event (triggers included) feeds later windows;
+            // the same kl grid batch Det.sumD(_, 4) accumulates
+            BufState((us, e.event_id, math.floor(e.value * 10000.0 + 0.5).toLong) :: win,
+              us, e.event_id)
+          }.foreach(state.update)
           out.result().iterator
       }
   }

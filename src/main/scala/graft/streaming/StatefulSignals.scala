@@ -20,10 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * rule-3 sequence (`(double)Σk / 10^s / n`, each op correctly rounded).
   * StatefulSignalsSpec asserts equality with the batch SmaCross output.
   *
-  * Event-time caveat: rows are sorted within each micro-batch per key;
-  * rows arriving after their key's state has advanced past them are
-  * dropped (watermark-style), unlike StreamingJob, which refolds its
-  * carried tail and so can reorder within it.
+  * Event-time caveat: rows fold through [[KeyedFold]], ordered within
+  * each micro-batch per key; rows arriving after their key's state has
+  * advanced past them are dropped (watermark-style), unlike
+  * StreamingJob, which refolds its carried tail and so can reorder
+  * within it.
   */
 object StatefulSignals {
 

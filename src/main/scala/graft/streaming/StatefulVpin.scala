@@ -20,10 +20,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     bucket bit-for-bit (StatefulVpinSpec proves equality across
   *     micro-batch splits and a checkpoint restart).
   *
-  * Ordering contract: same as [[StatefulImbalance]] / [[StatefulLatency]]
-  * — rows are sorted (event_time, sequence) within a micro-batch and a
-  * cross-batch straggler is dropped by the monotone (ts, seq) guard;
-  * streaming≡batch holds for feeds ordered at micro-batch granularity.
+  * Ordering contract: [[KeyedFold]]'s — rows fold in (event_time,
+  * sequence) order and a cross-batch straggler is dropped at the
+  * (ts, seq) guard; streaming≡batch holds for feeds ordered at
+  * micro-batch granularity.
   *
   * The vpin ratio is one exact-int |buy−sell| / n double division —
   * identical operand bits to the batch/oracle form at any partitioning.
@@ -55,39 +55,37 @@ object StatefulVpin {
       .flatMapGroupsWithState[VpinState, Bucket](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[TickIn], state: GroupState[VpinState]) =>
-          var st = state.getOption.getOrElse(
-            VpinState(Long.MinValue, Long.MinValue, Double.NaN, 0, 0L, 0L, 0L, 0L))
+          val prior = state.getOption
           val out = Vector.newBuilder[Bucket]
-          val sorted = rows.toVector
-            .sortBy(t => (EventTime.micros(t.event_time), t.sequence))
-          for (t <- sorted) {
-            val us = EventTime.micros(t.event_time)
-            if (us > st.lastUs || (us == st.lastUs && t.sequence > st.lastSeq)) {
-              val d =
-                if (st.lastPrice.isNaN) 0
-                else if (t.price > st.lastPrice) 1
-                else if (t.price < st.lastPrice) -1
-                else st.dir
-              st = st.copy(lastUs = us, lastSeq = t.sequence,
-                lastPrice = t.price, dir = d)
-              if (d != 0) {
-                st = st.copy(rn = st.rn + 1, nTicks = st.nTicks + 1,
-                  nBuy = st.nBuy + (if (d == 1) 1L else 0L),
-                  nSell = st.nSell + (if (d == -1) 1L else 0L))
-                if (st.nTicks == bucketSize) {
-                  out += row(key, (st.rn - 1) / bucketSize,
-                    st.nTicks, st.nBuy, st.nSell, closed = true)
-                  st = st.copy(nTicks = 0L, nBuy = 0L, nSell = 0L)
-                }
+          val folded = KeyedFold(rows, prior,
+              VpinState(Long.MinValue, Long.MinValue, Double.NaN, 0, 0L, 0L, 0L, 0L))(
+              _.event_time, _.sequence, st => (st.lastUs, st.lastSeq)) { (prev, t, us) =>
+            val d =
+              if (prev.lastPrice.isNaN) 0
+              else if (t.price > prev.lastPrice) 1
+              else if (t.price < prev.lastPrice) -1
+              else prev.dir
+            var st = prev.copy(lastUs = us, lastSeq = t.sequence,
+              lastPrice = t.price, dir = d)
+            if (d != 0) {
+              st = st.copy(rn = st.rn + 1, nTicks = st.nTicks + 1,
+                nBuy = st.nBuy + (if (d == 1) 1L else 0L),
+                nSell = st.nSell + (if (d == -1) 1L else 0L))
+              if (st.nTicks == bucketSize) {
+                out += row(key, (st.rn - 1) / bucketSize,
+                  st.nTicks, st.nBuy, st.nSell, closed = true)
+                st = st.copy(nTicks = 0L, nBuy = 0L, nSell = 0L)
               }
             }
+            st
           }
-          // open-tail snapshot: supersedes the previous snapshot of the
-          // same bucket (monotone n_ticks), equals the batch partial
-          if (st.nTicks > 0L)
+          folded.foreach(state.update)
+          // open-tail snapshot, re-emitted even when no row was new:
+          // supersedes the previous snapshot of the same bucket
+          // (monotone n_ticks), equals the batch partial
+          for (st <- folded.orElse(prior) if st.nTicks > 0L)
             out += row(key, st.rn / bucketSize,
               st.nTicks, st.nBuy, st.nSell, closed = false)
-          state.update(st)
           out.result().iterator
       }
   }

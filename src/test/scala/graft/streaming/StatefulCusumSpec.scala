@@ -60,4 +60,35 @@ class StatefulCusumSpec extends AnyFunSuite {
     assert(latest.toMap == batch,
       "streaming upserts must converge to the batch CUSUM bits")
   }
+
+  test("re-delivered and stale ticks are no-ops under the high-water mark") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+
+    val latest = mutable.LinkedHashMap[String, (Long, Long, Double, Double)]()
+    val ms = MemoryStream[TickIn]
+    val q = StatefulCusum.cusum(ms.toDS(), Scale, DriftK, ThreshK)
+      .writeStream.outputMode(OutputMode.Append())
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[StatefulCusum.CusumOut], _: Long) =>
+        df.collect().foreach { o =>
+          latest(o.product_id) = (o.n_ticks, o.n_alarms, o.max_s, o.final_s)
+        }
+      }.start()
+    try {
+      // replay an already-seen chunk, then strictly-older ticks
+      Seq(rows.slice(0, 300), rows.slice(150, 300), rows.slice(300, rows.size), rows.take(8))
+        .foreach { c => ms.addData(c); q.processAllAvailable() }
+    } finally q.stop()
+
+    val batch = Cusum.perKey(rows.toDF(), "product_id", "event_time", "sequence",
+        "price", Scale, DriftK, ThreshK)
+      .collect()
+      .map(r => r.getAs[String]("product_id") ->
+        ((r.getAs[Long]("n_ticks"), r.getAs[Long]("n_alarms"),
+          r.getAs[Double]("max_s"), r.getAs[Double]("final_s"))))
+      .toMap
+
+    assert(latest.toMap == batch)
+  }
 }

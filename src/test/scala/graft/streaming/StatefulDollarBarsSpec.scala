@@ -93,4 +93,22 @@ class StatefulDollarBarsSpec extends AnyFunSuite {
     assert(reconstruct(collected.toSeq) == batchBars(rows.toDF()),
       "a checkpoint restart must resume the prefix clock with the batch bits")
   }
+
+  test("re-delivered and stale ticks are no-ops under the high-water mark") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ms = MemoryStream[TickIn]
+    val q = StatefulDollarBars.bars(ms.toDS(), Target)
+      .writeStream.format("memory").queryName("dbarsreplay").start()
+    try {
+      val sorted = rows.sortBy(t => (t.event_time.getTime, t.product_id))
+      // replay an already-seen chunk, then strictly-older ticks
+      Seq(sorted.slice(0, 200), sorted.slice(80, 200), sorted.slice(200, sorted.size),
+          sorted.take(4))
+        .foreach { c => ms.addData(c); q.processAllAvailable() }
+      val got = reconstruct(s.table("dbarsreplay").as[Bar].collect().toSeq)
+      assert(got == batchBars(rows.toDF()))
+    } finally q.stop()
+  }
 }

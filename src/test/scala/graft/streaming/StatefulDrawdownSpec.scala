@@ -75,4 +75,54 @@ class StatefulDrawdownSpec extends AnyFunSuite {
     assert(latest.toMap == batch,
       "transformWithState upserts must equal the batch drawdown bits")
   }
+
+  test("re-delivered and stale ticks are no-ops under the high-water mark") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+    val latest = mutable.LinkedHashMap[String, (Long, Double, Double, Double)]()
+    try {
+      val ms = MemoryStream[TickIn]
+      val q = StatefulDrawdown.drawdown(ms.toDS())
+        .writeStream.outputMode(OutputMode.Append())
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[StatefulDrawdown.DrawOut], _: Long) =>
+          df.collect().foreach { o =>
+            latest(o.product_id) = (o.n_ticks, o.peak_price, o.max_drawdown, o.max_dd_frac)
+          }
+        }.start()
+      try {
+        // replay an already-seen chunk, then strictly-older ticks
+        Seq(rows.slice(0, 250), rows.slice(100, 250), rows.slice(250, rows.size), rows.take(6))
+          .foreach { c => ms.addData(c); q.processAllAvailable() }
+      } finally q.stop()
+    } finally {
+      prevProvider match {
+        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+
+    val w = Window.partitionBy(col("product_id"))
+      .orderBy(col("event_time"), col("sequence"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val k = floor(col("price") * lit(1e4) + lit(0.5)).cast("long")
+    val batch = rows.toDF()
+      .withColumn("runmax", max(k).over(w))
+      .withColumn("dd", col("runmax") - k)
+      .groupBy(col("product_id"))
+      .agg(count(lit(1)).as("n"),
+        (max(col("runmax")).cast("double") / 1e4).as("peak"),
+        (max(col("dd")).cast("double") / 1e4).as("mdd"),
+        max(col("dd").cast("double") / col("runmax").cast("double")).as("frac"))
+      .collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4))))
+      .toMap
+
+    assert(latest.toMap == batch)
+  }
 }

@@ -108,4 +108,23 @@ class StatefulVpinSpec extends AnyFunSuite {
     assert(got == want,
       "a checkpoint restart must resume mid-bucket with the batch bits")
   }
+
+  test("re-delivered and stale ticks are no-ops under the high-water mark") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+
+    val ms = MemoryStream[TickIn]
+    val q = StatefulVpin.buckets(ms.toDS(), BucketSize)
+      .writeStream.format("memory").queryName("vpinreplay").start()
+    try {
+      val sorted = rows.sortBy(t => (t.event_time.getTime, t.product_id))
+      // replay an already-seen chunk, then strictly-older ticks
+      Seq(sorted.slice(0, 600), sorted.slice(300, 600), sorted.slice(600, sorted.size),
+          sorted.take(6))
+        .foreach { c => ms.addData(c); q.processAllAvailable() }
+      val got = reconstruct(s.table("vpinreplay").as[Bucket].collect().toSeq)
+      assert(got == batchVpin(rows.toDF()))
+    } finally q.stop()
+  }
 }
