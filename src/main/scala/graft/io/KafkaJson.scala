@@ -54,12 +54,14 @@ object KafkaJson {
 
   /** Standalone streaming JSON sink (S2-S4) for single-output jobs. */
   def sink(df: DataFrame, servers: String, topic: String,
-           checkpointLocation: String, keyCol: Option[String] = None): StreamingQuery =
+           checkpointLocation: String, keyCol: Option[String] = None): StreamingQuery = {
+    LocalFs.bind(df.sparkSession)
     toJsonValue(df, keyCol).writeStream.format("kafka")
       .option("kafka.bootstrap.servers", servers)
       .option("topic", topic)
       .option("checkpointLocation", checkpointLocation)
       .start()
+  }
 
   /** Replay as a bounded batch read (S8/T8): the reference's seek-by-
     * timestamp/offset + paced republish collapses into a timestamp-bounded

@@ -30,7 +30,7 @@ object StatefulAttribution {
   private val Unset = Long.MinValue
 
   def attribute(events: Dataset[EventIn], horizonUs: Long): Dataset[AttributionOut] = {
-    val spark = events.sparkSession
+    val spark = graft.io.LocalFs.session(events)
     import spark.implicits._
     events
       .groupByKey(_.user_id)

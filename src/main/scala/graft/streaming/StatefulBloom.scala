@@ -33,7 +33,7 @@ object StatefulBloom {
   def words(stream: Dataset[KeyIn], bits: Int = 4096,
             hashes: Int = 3): Dataset[WordOut] = {
     require(bits % 64 == 0, "bits must pack into 64-bit words")
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .flatMap { r =>

@@ -45,7 +45,7 @@ object StatefulCdc {
                             nDel: Long, nRes: Long)
 
   def apply(stream: Dataset[ChangeIn]): Dataset[RowOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.user_id)

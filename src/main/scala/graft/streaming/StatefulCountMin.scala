@@ -44,7 +44,7 @@ object StatefulCountMin {
 
   def cells(stream: Dataset[CmIn], width: Int = 256,
             depth: Int = 3): Dataset[CellOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .flatMap(r => (0 until depth).iterator.map(h => Cell(h, cellOf(h, r.v, width))))

@@ -29,7 +29,7 @@ object StatefulCusum {
                             max_s: Double, final_s: Double)
 
   def cusum(ticks: Dataset[TickIn], scale: Int, driftK: Long, threshK: Long): Dataset[CusumOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     val pow = s"1e$scale".toDouble
 

@@ -75,7 +75,7 @@ object StatefulDedup {
   }
 
   def dedup(stream: Dataset[DocIn]): Dataset[DedupOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .map(doc => (md5Hex(doc.text), doc.doc_id))
@@ -102,7 +102,7 @@ object StatefulDedup {
     * trade. `watermarkDelay` is the usual lateness allowance. */
   def dedupTtl(stream: Dataset[DocTs], ttl: String = "6 hours",
                watermarkDelay: String = "0 seconds"): Dataset[DedupOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     val ttlMs = graft.streaming.EventTime.durationMs(ttl)
     stream

@@ -45,7 +45,7 @@ object StatefulDollarBars {
   def bars(ticks: Dataset[TickIn],
            targetCents: Long = 3000000L): Dataset[Bar] = {
     require(targetCents > 0, s"targetCents must be positive, got $targetCents")
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

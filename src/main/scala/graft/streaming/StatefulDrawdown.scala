@@ -62,7 +62,7 @@ object StatefulDrawdown {
   }
 
   def drawdown(ticks: Dataset[TickIn]): Dataset[DrawOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

@@ -35,7 +35,7 @@ object StatefulDrift {
   final case class DriftCell(source: String, v: Long, c: Long)
 
   def cells(stream: Dataset[DriftIn]): Dataset[DriftCell] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .map(r => CellKey(r.source, r.v))

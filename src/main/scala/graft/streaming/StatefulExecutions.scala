@@ -32,7 +32,7 @@ object StatefulExecutions {
       transaction_cost: Double, slippage_cost: Double)
 
   def executions(ticks: Dataset[TickIn], cfg: StrategyConfig): Dataset[ExecutionOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

@@ -32,7 +32,7 @@ object StatefulFifo {
                            open_qty: Long, open_cost_k: Long)
 
   def summaries(stream: Dataset[FifoIn]): Dataset[FifoOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.user_id)

@@ -49,7 +49,7 @@ object StatefulForwardLabel {
     // the pending set, so a zero horizon's own-instant self-match would
     // be missed — and a zero-horizon "forward" label is just the price
     require(horizonUs > 0, "horizon must be positive")
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.product_id)

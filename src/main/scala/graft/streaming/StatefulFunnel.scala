@@ -30,7 +30,7 @@ object StatefulFunnel {
 
   def funnel(events: Dataset[EventIn], s1: String, s2: String, s3: String,
              horizonSec: Long): Dataset[FunnelOut] = {
-    val spark = events.sparkSession
+    val spark = graft.io.LocalFs.session(events)
     import spark.implicits._
     val hUs = horizonSec * 1000000L
     val stepRank = Map(s1 -> 0, s2 -> 1, s3 -> 2)

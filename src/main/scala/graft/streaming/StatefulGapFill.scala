@@ -56,7 +56,7 @@ object StatefulGapFill {
   def grid(stream: Dataset[ObsIn], stepUs: Long,
            truncUs: Long): Dataset[GridOut] = {
     require(stepUs > 0 && truncUs > 0, "step and trunc must be positive")
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.product_id)

@@ -38,7 +38,7 @@ object StatefulHll {
   }
 
   def cells(stream: Dataset[HllIn], m: Int = 64): Dataset[RegOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .map { r => val (b, g) = reg(r.value, m); RegKey(r.key, b) -> g }

@@ -22,7 +22,7 @@ object StatefulHolt {
 
   def forecast(ticks: Dataset[TickIn], alpha: Double = 0.2,
                beta: Double = 0.1, horizon: Int = 5): Dataset[HoltOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     val a = alpha; val na = 1.0 - alpha
     val b = beta; val nb = 1.0 - beta

@@ -32,7 +32,7 @@ object StatefulImbalance {
   /** Stage 1: per-key sign chain (dir ∈ {+1, −1}; unclassifiable leading
     * run emits nothing, like the batch query's `dir IS NOT NULL`). */
   def classify(ticks: Dataset[TickIn]): Dataset[Classified] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

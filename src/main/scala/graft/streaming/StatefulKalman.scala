@@ -23,7 +23,7 @@ object StatefulKalman {
 
   def filter(ticks: Dataset[TickIn], q: Double, r: Double,
              p0: Double): Dataset[KOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

@@ -46,7 +46,7 @@ object StatefulKmeans {
 
   def refresh(stream: Dataset[VecIn],
               codebook: Array[(Int, Array[Double])]): Dataset[CentOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     val dim = if (codebook.isEmpty) 0 else codebook.head._2.length
     stream

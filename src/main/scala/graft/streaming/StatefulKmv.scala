@@ -38,7 +38,7 @@ object StatefulKmv {
     java.lang.Long.parseLong(StatefulDedup.md5Hex(v).substring(0, 12), 16)
 
   def sketch(stream: Dataset[KvIn], k: Int = 16): Dataset[KmvOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.key)

@@ -48,7 +48,7 @@ object StatefulLatency {
     * the drop are [[KeyedFold]]'s.
     */
   def gaps(events: Dataset[EventIn]): Dataset[Gap] = {
-    val spark = events.sparkSession
+    val spark = graft.io.LocalFs.session(events)
     import spark.implicits._
     events
       .groupByKey(_.event_type)
@@ -100,7 +100,7 @@ object StatefulLatency {
   def gapsBuffered(events: Dataset[EventIn],
                    allowedLatenessUs: Long): Dataset[Gap] = {
     require(allowedLatenessUs >= 0, "allowedLatenessUs must be >= 0")
-    val spark = events.sparkSession
+    val spark = graft.io.LocalFs.session(events)
     import spark.implicits._
     events
       .groupByKey(_.event_type)

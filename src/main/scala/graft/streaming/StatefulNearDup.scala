@@ -149,7 +149,7 @@ object StatefulNearDup {
             maxBucket: Int = graft.ops.Dedup.LshMaxBucket): Dataset[PairOut] = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .flatMap { doc =>
@@ -192,7 +192,7 @@ object StatefulNearDup {
                watermarkDelay: String = "0 seconds"): Dataset[PairOut] = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     val ttlMs = EventTime.durationMs(ttl)
     stream

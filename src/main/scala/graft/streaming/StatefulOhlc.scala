@@ -45,7 +45,7 @@ object StatefulOhlc {
     *              `floor(us / barUs) * barUs`). */
   def bars(stream: Dataset[TickIn], barUs: Long): Dataset[BarOut] = {
     require(barUs > 0, "bar width must be positive")
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.product_id)

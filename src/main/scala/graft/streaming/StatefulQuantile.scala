@@ -54,7 +54,7 @@ object StatefulQuantile {
   }
 
   def quantiles(stream: Dataset[ObsIn]): Dataset[QOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.product_id)

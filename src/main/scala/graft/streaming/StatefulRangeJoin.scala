@@ -45,7 +45,7 @@ object StatefulRangeJoin {
   private val WindowUs = 60000000L
 
   def enrich(stream: Dataset[EventIn]): Dataset[EnrichedOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .groupByKey(_.user_id)

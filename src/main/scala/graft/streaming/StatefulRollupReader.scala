@@ -93,7 +93,7 @@ object StatefulRollupReader {
   }
 
   def hourly(metrics: Dataset[MetricIn]): Dataset[RollOut] = {
-    val spark = metrics.sparkSession
+    val spark = graft.io.LocalFs.session(metrics)
     import spark.implicits._
     metrics
       .groupByKey(m => (m.strategy_run_id,

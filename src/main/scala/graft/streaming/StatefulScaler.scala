@@ -45,7 +45,7 @@ object StatefulScaler {
   }
 
   def refresh(stream: Dataset[VecIn]): Dataset[DimOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .flatMap(v => v.embedding.iterator.zipWithIndex

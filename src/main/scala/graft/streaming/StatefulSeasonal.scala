@@ -51,7 +51,7 @@ object StatefulSeasonal {
     (Math.floorDiv(ts.getTime, 3600000L) % 24L).toInt
 
   def profile(stream: Dataset[GridIn]): Dataset[SlotOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     // hourOf is epoch-arithmetic UTC; the batch twin's hour(grid_ts) is
     // session-timezone-dependent. The two agree only under a UTC
     // session — enforce that precondition instead of diverging silently.

@@ -60,7 +60,7 @@ object StatefulSessionize {
   /** Sessionize a watermarked stream keyed by user_id. `gapSec` is the
     * inactivity gap in seconds (matching batch Sessionize's duration). */
   def sessions(events: Dataset[EventIn], gapSec: Long): Dataset[SessionOut] = {
-    val spark = events.sparkSession
+    val spark = graft.io.LocalFs.session(events)
     import spark.implicits._
     val gapUs = gapSec * 1000000L
 

@@ -38,7 +38,7 @@ object StatefulSignals {
       spread: Double, signal_type: String, position: Double)
 
   def signals(ticks: Dataset[TickIn], cfg: StrategyConfig): Dataset[SignalOut] = {
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

@@ -56,7 +56,7 @@ object StatefulSubstring {
     * [[graft.queries.CorpusQueries.SubstrL]] by default). */
   def starts(stream: Dataset[DocIn],
              l: Int = graft.queries.CorpusQueries.SubstrL): Dataset[StartOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     stream
       .flatMap { doc =>

@@ -48,7 +48,7 @@ object StatefulTopK {
 
   def topK(stream: Dataset[VecIn], queries: Seq[(Long, Seq[Float])],
            k: Int = 10): Dataset[TopKOut] = {
-    val spark = stream.sparkSession
+    val spark = graft.io.LocalFs.session(stream)
     import spark.implicits._
     val qs = queries.map { case (qid, qv) => (qid, qv.toArray, dotL(qv, qv)) }
       .filter(_._3 > 0L)

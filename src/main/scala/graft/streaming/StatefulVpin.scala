@@ -48,7 +48,7 @@ object StatefulVpin {
     * ticks per bucket (the batch query's VpinBucket). */
   def buckets(ticks: Dataset[TickIn], bucketSize: Long = 50L): Dataset[Bucket] = {
     require(bucketSize > 0, s"bucketSize must be positive, got $bucketSize")
-    val spark = ticks.sparkSession
+    val spark = graft.io.LocalFs.session(ticks)
     import spark.implicits._
     ticks
       .groupByKey(_.product_id)

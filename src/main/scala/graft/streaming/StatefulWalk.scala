@@ -64,7 +64,7 @@ object StatefulWalk {
     require(stepsPerIngest >= 1, "stepsPerIngest must be >= 1")
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "node2vec weights must be positive")
-    val spark = starts.sparkSession
+    val spark = graft.io.LocalFs.session(starts)
     import spark.implicits._
     val adj: Map[Long, Array[Long]] =
       adjacency.map { case (k, v) => k -> v.toArray.sorted }
@@ -138,7 +138,7 @@ object StatefulWalk {
              stepsPerIngest: Int,
              seedPrefix: String = "walk"): Dataset[WalkOut] = {
     require(stepsPerIngest >= 1, "stepsPerIngest must be >= 1")
-    val spark = starts.sparkSession
+    val spark = graft.io.LocalFs.session(starts)
     import spark.implicits._
     // y-ascending neighbor ranking — the batch row_number(ORDER BY ny)
     val adj: Map[Long, Array[Long]] =

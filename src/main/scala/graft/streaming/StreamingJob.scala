@@ -215,6 +215,7 @@ final class StreamingJob(
 
   /** Start the single multi-sink streaming query. */
   def start(raw: DataFrame): StreamingQuery = {
+    graft.io.LocalFs.bind(raw.sparkSession) // the query's offset and commit logs
     val writer = raw
       .withWatermark("event_time", watermarkDelay)
       .writeStream

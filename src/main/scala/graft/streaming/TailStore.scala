@@ -22,11 +22,10 @@ import org.apache.spark.sql.types._
   * the old version or the new one, never neither. `N` is the newest
   * committed version + 1, found by [[load]] and then kept here: a new
   * process's batch ids start from 0 again, so they cannot number versions.
-  * Spark's `CheckpointFileManager.createAtomic` does the same through a
-  * `FileContext`, but on a local filesystem without Hadoop's native
-  * library it took ~45 ms per commit against ~15 ms for this
-  * `FileSystem` create and rename (4-core host; each local file create
-  * forks a `chmod`).
+  * The filesystem is [[graft.io.LocalFs.fileSystem]]'s, so on a local
+  * disk the create and rename fork no `chmod`: a live_feed commit takes a
+  * median 3.4 ms against 10.0 ms through Hadoop's stock local filesystem
+  * (traced live_feed run, seed 4, 4-core host).
   *
   * Load: the newest committed version; temporaries are ignored. An absent
   * directory, or one holding only temporaries, is "no state yet". A
@@ -38,7 +37,7 @@ private[streaming] final class TailStore(dir: String, spark: SparkSession) {
   import TailStore._
 
   private val root = new Path(dir)
-  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = graft.io.LocalFs.fileSystem(root, spark.sparkContext.hadoopConfiguration)
   private var newest = -1L
 
   private def version(n: Long) = new Path(root, s"v$n")
